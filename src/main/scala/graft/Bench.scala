@@ -1,5 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.tools.Harness
+import graft.tools.Harness.{Jvm, Pass}
 
 /** Per-round benchmark: runs every registered query at the given scale
   * factor and prints one JSON line for the driver.
@@ -12,48 +14,6 @@ import org.apache.spark.sql.SparkSession
   * so one broken query costs its own number, not the whole artifact's.
   */
 object Bench {
-
-  /** JVM-health counters sampled around each query: JIT compilation time,
-    * GC time, and code-cache occupancy. Emitted per query on stderr —
-    * suite-context perf regressions (a query that is fast in isolation but
-    * slow mid-suite) are JVM-environmental, and these counters localize
-    * whether the cost is JIT recompilation, GC pressure, or a full code
-    * cache that silently disabled the compiler.
-    */
-  private object Jvm {
-    import java.lang.management.ManagementFactory
-    import scala.jdk.CollectionConverters._
-    // null on JIT-less JVMs (-Xint), and compilation-time monitoring is
-    // optional — diagnostics degrade to 0 rather than aborting the suite
-    private val comp = Option(ManagementFactory.getCompilationMXBean)
-      .filter(_.isCompilationTimeMonitoringSupported)
-    private val gcs = ManagementFactory.getGarbageCollectorMXBeans.asScala
-    private val codeHeaps = ManagementFactory.getMemoryPoolMXBeans.asScala
-      .filter(_.getName.startsWith("CodeHeap"))
-    // whole-process CPU time (all threads, ns) — the HotSpot extension
-    // bean; -1 sentinel if the platform bean doesn't expose it
-    private val os = ManagementFactory.getOperatingSystemMXBean match {
-      case b: com.sun.management.OperatingSystemMXBean => Some(b)
-      case _ => None
-    }
-    def jitMs: Long = comp.map(_.getTotalCompilationTime).getOrElse(0L)
-    def gcMs: Long = gcs.map(_.getCollectionTime).sum
-    def cpuMs: Long = os.map(_.getProcessCpuTime / 1000000L).getOrElse(-1L)
-    def codeCacheMb: Long = codeHeaps.map(_.getUsage.getUsed).sum >> 20
-  }
-
-  /** One measured execution of one query: wall seconds plus the process-CPU
-    * and GC milliseconds the JVM itself accrued inside the timed region.
-    * This is the within-pass stall evidence `max_tstart_gap` can't see: a
-    * host freeze INSIDE a pass advances wall while cpu+gc stand still, so a
-    * pass whose whole 32-thread process averaged under half of one core
-    * (`lowCpu`) carries its own interference verdict — no judge re-run
-    * needed to adjudicate a slow number that the JVM never worked for.
-    */
-  final case class Pass(wall: Double, cpuMs: Long, gcMs: Long) {
-    def lowCpu: Boolean =
-      wall > 1.0 && cpuMs >= 0 && (cpuMs + gcMs) < wall * 500.0
-  }
 
   /** Freeze-signature drift detector (VERDICT r17 #1). A host freeze
     * spanning the cold pass AND both steady passes defeats every
@@ -136,20 +96,16 @@ object Bench {
     }
   }
 
+  /** bench_full.json's `failed` map. Each message is cut to 200 chars
+    * BEFORE escaping: a cut after escaping can split an escape sequence.
+    */
+  def failuresJson(failed: Seq[(String, String)]): String = failed.map {
+    case (k, v) => Harness.jsonString(k) + ":" + Harness.jsonString(v.take(200))
+  }.mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // experiment knob: AQE on by default (the at-scale configuration);
-      // SPARK_GRAFT_AQE=false measures its per-query re-plan overhead
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", Harness.BenchSf)
+    val spark = Harness.session()
     // untimed warmup: pay session/codegen/parquet-footer costs once so the
     // first measured query reflects steady-state execution, not JVM startup;
     // stage the source-scan fixtures (they are inputs, not operators — a
@@ -161,22 +117,19 @@ object Bench {
       try step catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] warmup step failed (continuing): ${e.getMessage}")
       }
-    warm(graft.core.Tables.events(spark, sfDir)
-      .write.format("noop").mode("overwrite").save())
+    warm(Harness.noop(graft.core.Tables.events(spark, sfDir)))
     // ...and the sort/shuffle codepaths (range sampling + exchange + sort
     // JIT), which every registered query's deterministic trailing orderBy
     // exercises
-    warm(graft.core.Tables.events(spark, sfDir).select("event_id")
-      .orderBy("event_id").write.format("noop").mode("overwrite").save())
+    warm(Harness.noop(graft.core.Tables.events(spark, sfDir).select("event_id")
+      .orderBy("event_id")))
     // ...and the hash-aggregate exchange path + the other parquet footers
     // (the first measured query otherwise pays both: q01 ran ~1.5 s over
     // its steady state before this)
-    warm(graft.core.Tables.lineitem(spark, sfDir)
-      .groupBy("l_returnflag").count()
-      .write.format("noop").mode("overwrite").save())
+    warm(Harness.noop(graft.core.Tables.lineitem(spark, sfDir)
+      .groupBy("l_returnflag").count()))
     Seq("orders", "customer", "documents", "embeddings").foreach { t =>
-      warm(graft.core.Tables(spark, sfDir, t).limit(1)
-        .write.format("noop").mode("overwrite").save())
+      warm(Harness.noop(graft.core.Tables(spark, sfDir, t).limit(1)))
     }
     warm(graft.queries.SourceQueries.stageAll(spark, sfDir))
     warm(graft.queries.IngestQueries.stageAll(spark, sfDir))
@@ -234,21 +187,8 @@ object Bench {
     // the compact line names them, and the exit code is still nonzero — no
     // fake times, no silent passes, but every measurable query measured.
     val failed = scala.collection.mutable.LinkedHashMap[String, String]()
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Pass = {
-      spark.sharedState.cacheManager.clearCache()
-      val (cpu0, gc0) = (Jvm.cpuMs, Jvm.gcMs)
-      val t0 = System.nanoTime()
-      // scoped = the library's cache-lifetime contract (CacheScope):
-      // builder-persisted projections are unpersisted on scope exit, so
-      // the clearCache above is a belt-and-braces reset, not load-bearing
-      graft.core.CacheScope.scoped {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      }
-      val wall = (System.nanoTime() - t0) / 1e9
-      val cpu1 = Jvm.cpuMs
-      val cpuD = if (cpu0 < 0 || cpu1 < 0) -1L else cpu1 - cpu0
-      Pass(wall, cpuD, Jvm.gcMs - gc0)
-    }
+    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Pass =
+      Harness.timed(spark)(Harness.noop(fn(spark, sfDir)))._1
     val qfns = SparkEntry.queries
     // seeded-random execution order: on the shared driver host, stalls
     // cluster in TIME (round 6: the alphabetical tail q62-q70 absorbed the
@@ -269,11 +209,11 @@ object Bench {
       val tStart = (System.nanoTime() - suiteT0) / 1e9
       val jit0 = Jvm.jitMs
       try {
-        val cold = once(name, fn)
+        val cold = once(fn)
         val jit1 = Jvm.jitMs - jit0
-        val steady1 = once(name, fn)
+        val steady1 = once(fn)
         val jitS1 = Jvm.jitMs - jit0 - jit1
-        val steady2 = once(name, fn)
+        val steady2 = once(fn)
         // per-pass JIT deltas (ADVICE r18): the drift detector pairs each
         // steady pass's wall with THAT pass's own JIT, so steady2 needs
         // its delta captured too (it was previously unmeasured)
@@ -296,7 +236,7 @@ object Bench {
       // inversions even the repair pass couldn't clear.
       if (!r.invertedRaw) r
       else try {
-        val p = once(r.name, qfns(r.name))
+        val p = once(qfns(r.name))
         System.err.println(f"[bench] ${r.name}%-28s repair=${p.wall}%6.2fs" +
           f" (steady was ${r.steadyRaw}%.2fs vs cold ${r.cold.wall}%.2fs)")
         r.copy(repair = Some(p))
@@ -343,7 +283,7 @@ object Bench {
         minPass.wall, rf, minPassJit, minPass.gcMs))
       if (!suspect) None
       else try {
-        val p = once(r.name, qfns(r.name))
+        val p = once(qfns(r.name))
         System.err.println(f"[bench] ${r.name}%-28s drift-probe=${p.wall}%6.2fs" +
           f" (steady ${r.steady}%.2fs vs ref ${refLedger(r.name)}%.2fs)")
         Some(r.name -> p.wall)
@@ -423,14 +363,7 @@ object Bench {
     // line; bench_full.json carries every name with its message
     val failedJson = failed.keys.take(12)
       .map("\"" + _ + "\"").mkString("[", ",", "]")
-    // truncate the RAW message before escaping — a take() after escaping
-    // can split a two-char escape (\\ or \") and leave a lone trailing
-    // backslash that swallows the closing quote, corrupting the JSON
-    val failedFullJson = failed
-      .map { case (k, v) =>
-        "\"" + k + "\":\"" + v.take(200).replace("\\", "\\\\")
-          .replace("\"", "\\\"").replaceAll("[\\n\\r\\t]", " ") + "\""
-      }.mkString("{", ",", "}")
+    val failedFullJson = failuresJson(failed.toSeq)
     // self-adjudicating stall evidence: the largest UNEXPLAINED wall-clock
     // gap between consecutive queries — time between two t_start values
     // not accounted for by the intervening query's three measured passes.

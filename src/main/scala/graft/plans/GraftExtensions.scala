@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.StringType
 
 /** Engine extension wiring (`spark.sql.extensions=graft.plans.GraftExtensions`):
   * registers the engine's native expressions with the session's function
@@ -18,278 +19,123 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftExtensions.functions.foreach { case (name, info, builder) =>
-      ext.injectFunction((FunctionIdentifier(name), info, builder))
+    GraftExtensions.functions.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name), f.info, f.builder))
     }
     ext.injectOptimizerRule(_ => PipBboxPruneRule)
   }
 }
 
 object GraftExtensions {
-  val functions: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    ("graft_h64",
-      new ExpressionInfo(classOf[H64Expression].getName, "graft_h64"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1,
-          s"graft_h64 expects (text), got ${children.length} args")
-        H64Expression(children.head)
-      }),
-    ("graft_normalize_key",
-      new ExpressionInfo(classOf[NormalizeKeyExpression].getName, "graft_normalize_key"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1,
-          s"graft_normalize_key expects (text), got ${children.length} args")
-        NormalizeKeyExpression(children.head)
-      }),
-    ("graft_shingles",
-      new ExpressionInfo(classOf[WordShinglesExpression].getName, "graft_shingles"),
-      (children: Seq[Expression]) => {
-        // n rides as a foldable int literal
-        require(children.length == 2,
-          s"graft_shingles expects (text, n), got ${children.length} args")
-        require(children(1).foldable, "graft_shingles n must be literal")
-        WordShinglesExpression(children.head,
-          children(1).eval().asInstanceOf[Number].intValue())
-      }),
-    ("graft_grams",
-      new ExpressionInfo(classOf[WordGramsExpression].getName, "graft_grams"),
-      (children: Seq[Expression]) => {
-        // n rides as a foldable int literal
-        require(children.length == 2,
-          s"graft_grams expects (text, n), got ${children.length} args")
-        require(children(1).foldable, "graft_grams n must be literal")
-        WordGramsExpression(children.head,
-          children(1).eval().asInstanceOf[Number].intValue())
-      }),
-    ("graft_nfc",
-      new ExpressionInfo(classOf[NfcNormalizeExpression].getName, "graft_nfc"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1,
-          s"graft_nfc expects (text), got ${children.length} args")
-        NfcNormalizeExpression(children.head)
-      }),
-    ("graft_point_in_polygon",
-      new ExpressionInfo(classOf[PointInPolygonExpression].getName, "graft_point_in_polygon"),
-      (children: Seq[Expression]) => {
-        // ring rides as two foldable array literals: (lon, lat, xs, ys)
-        def asDoubles(e: Expression): Array[Double] = {
-          require(e.foldable, "graft_point_in_polygon ring must be literal")
-          e.eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-            .toDoubleArray()
-        }
-        PointInPolygonExpression(children(0), children(1),
-          asDoubles(children(2)), asDoubles(children(3)))
-      }),
-    ("graft_hyperplane_sig",
-      new ExpressionInfo(classOf[HyperplaneSignatureExpression].getName, "graft_hyperplane_sig"),
-      (children: Seq[Expression]) => {
-        // dims/bits ride as foldable int literals
-        require(children.length == 3,
-          s"graft_hyperplane_sig expects (vec, dims, bits), got ${children.length} args")
-        def asInt(e: Expression): Int = {
-          require(e.foldable, "graft_hyperplane_sig dims/bits must be literal")
-          e.eval().asInstanceOf[Number].intValue()
-        }
-        HyperplaneSignatureExpression(children(0), asInt(children(1)), asInt(children(2)))
-      }),
-    ("graft_dot",
-      new ExpressionInfo(classOf[DotProductExpression].getName, "graft_dot"),
-      (children: Seq[Expression]) => {
-        // dims (and the optional subspace offset) ride as foldable int
-        // literals
-        require(children.length == 3 || children.length == 4,
-          s"graft_dot expects (a, b, dims[, offset]), got ${children.length} args")
-        require(children.drop(2).forall(_.foldable),
-          "graft_dot dims/offset must be literal")
-        DotProductExpression(children(0), children(1),
-          children(2).eval().asInstanceOf[Number].intValue(),
-          if (children.length == 4)
-            children(3).eval().asInstanceOf[Number].intValue()
-          else 0)
-      }),
-    ("graft_maxsim",
-      new ExpressionInfo(classOf[MaxSimExpression].getName, "graft_maxsim"),
-      (children: Seq[Expression]) => {
-        // tokens/tokDims ride as foldable int literals
-        require(children.length == 4,
-          s"graft_maxsim expects (q, d, tokens, tokDims), got ${children.length} args")
-        require(children.drop(2).forall(_.foldable),
-          "graft_maxsim tokens/tokDims must be literal")
-        MaxSimExpression(children(0), children(1),
-          children(2).eval().asInstanceOf[Number].intValue(),
-          children(3).eval().asInstanceOf[Number].intValue())
-      }),
-    ("graft_any_contains",
-      new ExpressionInfo(classOf[AnyContainsExpression].getName, "graft_any_contains"),
-      (children: Seq[Expression]) => {
-        // needle rides as a foldable string literal
-        require(children.length == 2,
-          s"graft_any_contains expects (arr, needle), got ${children.length} args")
-        require(children(1).foldable, "graft_any_contains needle must be literal")
-        AnyContainsExpression(children.head,
-          children(1).eval().asInstanceOf[UTF8String].toString)
-      }),
-    ("graft_barrier",
-      new ExpressionInfo(classOf[BarrierExpression].getName, "graft_barrier"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1,
-          s"graft_barrier expects (expr), got ${children.length} args")
-        BarrierExpression(children.head)
-      }),
-    ("graft_scalar_keys",
-      new ExpressionInfo(classOf[ScalarKeysExpression].getName, "graft_scalar_keys"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1,
-          s"graft_scalar_keys expects (map), got ${children.length} args")
-        ScalarKeysExpression(children.head)
-      }),
-    ("graft_winnow_stats",
-      new ExpressionInfo(classOf[WinnowStatsExpression].getName, "graft_winnow_stats"),
-      (children: Seq[Expression]) => {
-        // n and w ride as foldable int literals
-        require(children.length == 3,
-          s"graft_winnow_stats expects (text, n, w), got ${children.length} args")
-        require(children(1).foldable && children(2).foldable,
-          "graft_winnow_stats n and w must be literal")
-        WinnowStatsExpression(children.head,
-          children(1).eval().asInstanceOf[Number].intValue(),
-          children(2).eval().asInstanceOf[Number].intValue())
-      }),
-    ("graft_cls_score",
-      new ExpressionInfo(classOf[ClsScoreExpression].getName, "graft_cls_score"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1,
-          s"graft_cls_score expects (text), got ${children.length} args")
-        ClsScoreExpression(children.head)
-      }),
-    ("graft_cdc_chunks",
-      new ExpressionInfo(classOf[CdcChunksExpression].getName, "graft_cdc_chunks"),
-      (children: Seq[Expression]) => {
-        // mod rides as a foldable long literal
-        require(children.length == 2,
-          s"graft_cdc_chunks expects (text, mod), got ${children.length} args")
-        require(children(1).foldable, "graft_cdc_chunks mod must be literal")
-        CdcChunksExpression(children.head,
-          children(1).eval().asInstanceOf[Number].longValue())
-      }),
-    ("graft_char_entropy",
-      new ExpressionInfo(classOf[CharEntropyExpression].getName, "graft_char_entropy"),
-      (children: Seq[Expression]) => {
-        // cap rides as a foldable int literal
-        require(children.length == 2,
-          s"graft_char_entropy expects (text, cap), got ${children.length} args")
-        require(children(1).foldable, "graft_char_entropy cap must be literal")
-        CharEntropyExpression(children.head,
-          children(1).eval().asInstanceOf[Number].intValue())
-      }),
-    ("graft_top_word_count",
-      new ExpressionInfo(classOf[TopWordCountExpression].getName, "graft_top_word_count"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1,
-          s"graft_top_word_count expects (text), got ${children.length} args")
-        TopWordCountExpression(children.head)
-      }),
-    ("graft_stopword_count",
-      new ExpressionInfo(classOf[StopwordCountExpression].getName, "graft_stopword_count"),
-      (children: Seq[Expression]) => {
-        // the stopword set rides as a foldable array literal
-        require(children.length == 2,
-          s"graft_stopword_count expects (words, stopwords), got ${children.length} args")
-        require(children(1).foldable, "graft_stopword_count stopwords must be literal")
-        val words = children(1).eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-        StopwordCountExpression(children(0),
-          words.toObjectArray(org.apache.spark.sql.types.StringType)
-            .map(_.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString)
-            .toSeq)
-      }),
-    ("graft_hll",
-      new ExpressionInfo(classOf[HyperLogLogAgg].getName, "graft_hll"),
-      (children: Seq[Expression]) => {
-        // precision rides as a foldable int literal; the analyzer wraps the
-        // AggregateFunction into an AggregateExpression itself
-        require(children.length == 2,
-          s"graft_hll expects (col, precision), got ${children.length} args")
-        require(children(1).foldable, "graft_hll precision must be literal")
-        HyperLogLogAgg(children(0),
-          children(1).eval().asInstanceOf[Number].intValue())
-      }),
-    ("graft_bloom",
-      new ExpressionInfo(classOf[BloomFilterAgg].getName, "graft_bloom"),
-      (children: Seq[Expression]) => {
-        // bitsLog2 and k ride as foldable int literals
-        require(children.length == 3,
-          s"graft_bloom expects (fp, bitsLog2, k), got ${children.length} args")
-        require(children(1).foldable && children(2).foldable,
-          "graft_bloom bitsLog2 and k must be literal")
-        BloomFilterAgg(children(0),
-          children(1).eval().asInstanceOf[Number].intValue(),
-          children(2).eval().asInstanceOf[Number].intValue())
-      }),
-    ("graft_bloom_probe",
-      new ExpressionInfo(classOf[BloomProbeExpression].getName, "graft_bloom_probe"),
-      (children: Seq[Expression]) => {
-        // k rides as a foldable int literal
-        require(children.length == 3,
-          s"graft_bloom_probe expects (bitmap, fp, k), got ${children.length} args")
-        require(children(2).foldable, "graft_bloom_probe k must be literal")
-        BloomProbeExpression(children(0), children(1),
-          children(2).eval().asInstanceOf[Number].intValue())
-      }),
-    ("graft_cms",
-      new ExpressionInfo(classOf[CountMinAgg].getName, "graft_cms"),
-      (children: Seq[Expression]) => {
-        // widthLog2 and depth ride as foldable int literals
-        require(children.length == 3,
-          s"graft_cms expects (fp, widthLog2, depth), got ${children.length} args")
-        require(children(1).foldable && children(2).foldable,
-          "graft_cms widthLog2 and depth must be literal")
-        CountMinAgg(children(0),
-          children(1).eval().asInstanceOf[Number].intValue(),
-          children(2).eval().asInstanceOf[Number].intValue())
-      }),
-    ("graft_cms_query",
-      new ExpressionInfo(classOf[CmsQueryExpression].getName, "graft_cms_query"),
-      (children: Seq[Expression]) => {
-        // depth rides as a foldable int literal
-        require(children.length == 3,
-          s"graft_cms_query expects (sketch, fp, depth), got ${children.length} args")
-        require(children(2).foldable, "graft_cms_query depth must be literal")
-        CmsQueryExpression(children(0), children(1),
-          children(2).eval().asInstanceOf[Number].intValue())
-      }),
-    ("graft_bottomk",
-      new ExpressionInfo(classOf[BottomKSketchAgg].getName, "graft_bottomk"),
-      (children: Seq[Expression]) => {
-        // k and salt ride as foldable literals
-        require(children.length == 3,
-          s"graft_bottomk expects (col, k, salt), got ${children.length} args")
-        require(children(1).foldable && children(2).foldable,
-          "graft_bottomk k and salt must be literal")
-        BottomKSketchAgg(children(0),
-          children(1).eval().asInstanceOf[Number].intValue(),
-          children(2).eval().toString)
-      }),
-    ("graft_gram",
-      new ExpressionInfo(classOf[GramMatrixAgg].getName, "graft_gram"),
-      (children: Seq[Expression]) => {
-        // dims and quantum ride as foldable literals
-        require(children.length == 3,
-          s"graft_gram expects (vec, dims, quantum), got ${children.length} args")
-        require(children(1).foldable && children(2).foldable,
-          "graft_gram dims and quantum must be literal")
-        GramMatrixAgg(children(0),
-          children(1).eval().asInstanceOf[Number].intValue(),
-          children(2).eval().asInstanceOf[Number].longValue())
-      }))
+
+  /** One registry entry: `builder` checks the argument count against
+    * `arity` (plus up to `optional` trailing arguments) and requires every
+    * argument from `dialsFrom` on to be a foldable literal (a dial).
+    */
+  final case class Fn(name: String, info: ExpressionInfo, arity: Int,
+      optional: Int, dialsFrom: Int, builder: Seq[Expression] => Expression)
+
+  /** A call's arguments, with the dials constant-folded. */
+  private final class Args(children: Seq[Expression]) {
+    def size: Int = children.length
+    def apply(i: Int): Expression = children(i)
+    def int(i: Int): Int = children(i).eval().asInstanceOf[Number].intValue()
+    def long(i: Int): Long = children(i).eval().asInstanceOf[Number].longValue()
+    def string(i: Int): String = children(i).eval().toString
+    def array(i: Int): ArrayData = children(i).eval().asInstanceOf[ArrayData]
+  }
+
+  /** An entry whose arity message names the arguments `sig` and whose
+    * literal message names the dials `dials._2`, from position `dials._1`.
+    */
+  private def fn(name: String, cls: Class[_], sig: String, arity: Int,
+      optional: Int = 0, dials: (Int, String) = (Int.MaxValue, ""))(
+      make: Args => Expression): Fn = {
+    val (dialsFrom, dialNames) = dials
+    Fn(name, new ExpressionInfo(cls.getName, name), arity, optional, dialsFrom,
+      children => {
+        require(children.length >= arity && children.length <= arity + optional,
+          s"$name expects $sig, got ${children.length} args")
+        require(children.drop(dialsFrom).forall(_.foldable),
+          s"$name $dialNames must be literal")
+        make(new Args(children))
+      })
+  }
+
+  val functions: Seq[Fn] = Seq(
+    fn("graft_h64", classOf[H64Expression], "(text)", 1)(a =>
+      H64Expression(a(0))),
+    fn("graft_normalize_key", classOf[NormalizeKeyExpression], "(text)", 1)(a =>
+      NormalizeKeyExpression(a(0))),
+    fn("graft_shingles", classOf[WordShinglesExpression], "(text, n)", 2,
+      dials = 1 -> "n")(a => WordShinglesExpression(a(0), a.int(1))),
+    fn("graft_grams", classOf[WordGramsExpression], "(text, n)", 2,
+      dials = 1 -> "n")(a => WordGramsExpression(a(0), a.int(1))),
+    fn("graft_nfc", classOf[NfcNormalizeExpression], "(text)", 1)(a =>
+      NfcNormalizeExpression(a(0))),
+    fn("graft_point_in_polygon", classOf[PointInPolygonExpression],
+      "(lon, lat, xs, ys)", 4, dials = 2 -> "ring")(a =>
+      PointInPolygonExpression(a(0), a(1), a.array(2).toDoubleArray(),
+        a.array(3).toDoubleArray())),
+    fn("graft_hyperplane_sig", classOf[HyperplaneSignatureExpression],
+      "(vec, dims, bits)", 3, dials = 1 -> "dims/bits")(a =>
+      HyperplaneSignatureExpression(a(0), a.int(1), a.int(2))),
+    fn("graft_dot", classOf[DotProductExpression], "(a, b, dims[, offset])", 3,
+      optional = 1, dials = 2 -> "dims/offset")(a =>
+      DotProductExpression(a(0), a(1), a.int(2), if (a.size == 4) a.int(3) else 0)),
+    fn("graft_maxsim", classOf[MaxSimExpression], "(q, d, tokens, tokDims)", 4,
+      dials = 2 -> "tokens/tokDims")(a =>
+      MaxSimExpression(a(0), a(1), a.int(2), a.int(3))),
+    fn("graft_any_contains", classOf[AnyContainsExpression], "(arr, needle)", 2,
+      dials = 1 -> "needle")(a => AnyContainsExpression(a(0), a.string(1))),
+    fn("graft_barrier", classOf[BarrierExpression], "(expr)", 1)(a =>
+      BarrierExpression(a(0))),
+    fn("graft_scalar_keys", classOf[ScalarKeysExpression], "(map)", 1)(a =>
+      ScalarKeysExpression(a(0))),
+    fn("graft_winnow_stats", classOf[WinnowStatsExpression], "(text, n, w)", 3,
+      dials = 1 -> "n and w")(a =>
+      WinnowStatsExpression(a(0), a.int(1), a.int(2))),
+    fn("graft_cls_score", classOf[ClsScoreExpression], "(text)", 1)(a =>
+      ClsScoreExpression(a(0))),
+    fn("graft_cdc_chunks", classOf[CdcChunksExpression], "(text, mod)", 2,
+      dials = 1 -> "mod")(a => CdcChunksExpression(a(0), a.long(1))),
+    fn("graft_char_entropy", classOf[CharEntropyExpression], "(text, cap)", 2,
+      dials = 1 -> "cap")(a => CharEntropyExpression(a(0), a.int(1))),
+    fn("graft_top_word_count", classOf[TopWordCountExpression], "(text)", 1)(a =>
+      TopWordCountExpression(a(0))),
+    fn("graft_stopword_count", classOf[StopwordCountExpression],
+      "(words, stopwords)", 2, dials = 1 -> "stopwords")(a =>
+      StopwordCountExpression(a(0),
+        a.array(1).toObjectArray(StringType).map(_.toString).toSeq)),
+    // the aggregates: the analyzer wraps each AggregateFunction into an
+    // AggregateExpression itself
+    fn("graft_hll", classOf[HyperLogLogAgg], "(col, precision)", 2,
+      dials = 1 -> "precision")(a => HyperLogLogAgg(a(0), a.int(1))),
+    fn("graft_bloom", classOf[BloomFilterAgg], "(fp, bitsLog2, k)", 3,
+      dials = 1 -> "bitsLog2 and k")(a =>
+      BloomFilterAgg(a(0), a.int(1), a.int(2))),
+    fn("graft_bloom_probe", classOf[BloomProbeExpression], "(bitmap, fp, k)", 3,
+      dials = 2 -> "k")(a => BloomProbeExpression(a(0), a(1), a.int(2))),
+    fn("graft_cms", classOf[CountMinAgg], "(fp, widthLog2, depth)", 3,
+      dials = 1 -> "widthLog2 and depth")(a =>
+      CountMinAgg(a(0), a.int(1), a.int(2))),
+    fn("graft_cms_query", classOf[CmsQueryExpression], "(sketch, fp, depth)", 3,
+      dials = 2 -> "depth")(a => CmsQueryExpression(a(0), a(1), a.int(2))),
+    fn("graft_bottomk", classOf[BottomKSketchAgg], "(col, k, salt)", 3,
+      dials = 1 -> "k and salt")(a =>
+      BottomKSketchAgg(a(0), a.int(1), a.string(2))),
+    fn("graft_gram", classOf[GramMatrixAgg], "(vec, dims, quantum)", 3,
+      dials = 1 -> "dims and quantum")(a =>
+      GramMatrixAgg(a(0), a.int(1), a.long(2))))
 
   /** Imperative registration for externally-created sessions: functions go
     * to the registry, the optimizer rule to `experimental.extraOptimizations`
     * (both idempotent).
     */
   def register(spark: SparkSession): Unit = {
-    functions.foreach { case (name, info, builder) =>
+    functions.foreach { f =>
       spark.sessionState.functionRegistry
-        .registerFunction(FunctionIdentifier(name), info, builder)
+        .registerFunction(FunctionIdentifier(f.name), f.info, f.builder)
     }
     if (!spark.experimental.extraOptimizations.contains(PipBboxPruneRule)) {
       spark.experimental.extraOptimizations =

@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-/** Query registry plumbing shared by SparkEntry / Verify / Bench.
+/** Query registry plumbing shared by SparkEntry and the entry points
+  * that run it (Verify, Bench, Probe, PlanAudit, ScaleRehearsal), all on
+  * the one session of `graft.tools.Harness`.
   *
   * Every operator claimed in SURVEY.md §2 registers a [[queries.GraftQuery]]:
   * a named DataFrame pipeline over the driver's test tables plus (when the

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev audit: scan every registered query's PHYSICAL plan for scale
   * hazards — unpartitioned windows, cartesian products, non-broadcast
   * nested-loop joins — report join strategies, and measure whole-stage-
@@ -101,14 +99,10 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // static audit: AQE defers codegen collapse to per-stage
-      // materialization, so the adaptive initial plan never shows
-      // WholeStageCodegen spans — audit the non-adaptive physical plan
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // static audit: AQE defers codegen collapse to per-stage
+    // materialization, so the adaptive initial plan never shows
+    // WholeStageCodegen spans — audit the non-adaptive physical plan
+    val spark = Harness.session(adaptive = false)
     spark.sparkContext.setLogLevel("ERROR")
     var flagged = 0
     var coveredTotal = 0
@@ -169,8 +163,10 @@ object PlanAudit {
           println(s"HAZARD $name: ${hazards.mkString(", ")}")
         }
         if (joins.nonEmpty) println(s"joins  $name: ${joins.map { case (j, n) => s"$j=$n" }.mkString(" ")}")
-      } catch {
-        case e: Throwable => println(s"ERROR  $name: ${e.getMessage.take(120)}")
+      } catch { case e: Throwable =>
+        // a query that cannot even be planned is a hazard, not a skip
+        flagged += 1
+        println(s"ERROR  $name: ${String.valueOf(e.getMessage).take(120)}")
       }
     }
     println(f"codegen coverage: $coveredTotal/$eligibleTotal eligible operators in whole-stage spans (${100.0 * coveredTotal / math.max(1, eligibleTotal)}%.1f%%)")

@@ -35,18 +35,7 @@ import org.apache.spark.sql.functions._
   */
 object ScaleRehearsal {
 
-  /** Adaptive-stride rerank forms measured by [[run]] (the registered
-    * %-50 queries are quadratic by protocol at gated SFs — see the
-    * queries-list comment).
-    */
-  private object RetrievalAdaptive {
-    val maxsim: (SparkSession, String) => DataFrame =
-      (s, d) => graft.queries.RetrievalOps.maxsimRerankAdaptive(s, d)
-    val matryoshka: (SparkSession, String) => DataFrame =
-      (s, d) => graft.queries.RetrievalOps.matryoshkaAgreementAdaptive(s, d)
-  }
-
-  private val Base = "/root/testdata/sf0.1"
+  private val Base = Harness.BenchSf
   private val Out = "target/scale10"
   private val Seed = 20260814L
 
@@ -71,42 +60,32 @@ object ScaleRehearsal {
   private def num(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", v: java.lang.Double)
 
-  private def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  def gen(spark: SparkSession, factor: Int): Unit = {
+  /** Writes `factor`× replicas of events and documents (and embeddings
+    * when asked) under `out`, derived as described above; replica 0 is
+    * the original. The dial memos are keyed by dir path and this rewrite
+    * just changed what `out` holds, so their entries go (ADVICE r15).
+    */
+  private def replicate(spark: SparkSession, factor: Int, out: String,
+      partitions: Int, embeddings: Boolean): Unit = {
     import spark.implicits._
-    Files.createDirectories(Paths.get(Out))
-
-    // events: id/user shift + timeline extension by whole spans
+    Files.createDirectories(Paths.get(out))
+    val reps = spark.range(factor).select(col("id").cast("int").as("rep"))
     val ev = spark.read.parquet(s"$Base/events.parquet")
       .withColumn("ts", col("ts").cast("timestamp"))
     val (minUs, maxUs) = ev.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))))
       .as[(Long, Long)].head()
     val spanUs = maxUs - minUs + 3600L * 1000000L
-    val reps = spark.range(factor).select(col("id").cast("int").as("rep"))
     ev.crossJoin(broadcast(reps))
       .select(
         (col("event_id") + col("rep") * lit(1000000L)).as("event_id"),
         timestamp_micros(unix_micros(col("ts")) + col("rep") * lit(spanUs)).as("ts"),
         (col("user_id") + col("rep") * lit(1000000L)).as("user_id"),
         col("event_type"), col("value"), col("props"))
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$Out/events.parquet")
-
-    // documents: deterministic per-replica word shuffle (replica 0 = original)
-    val docs = spark.read.parquet(s"$Base/documents.parquet")
+      .repartition(partitions)
+      .write.mode("overwrite").parquet(s"$out/events.parquet")
+    spark.read.parquet(s"$Base/documents.parquet")
       .as[(Long, String, String, String, Long)]
-    docs.crossJoin(broadcast(reps)).as[(Long, String, String, String, Long, Int)]
+      .crossJoin(broadcast(reps)).as[(Long, String, String, String, Long, Int)]
       .map { case (id, text, lang, source, nChars, rep) =>
         val newText = if (rep == 0) text else {
           val words = text.split("\\s+").toSeq
@@ -116,13 +95,11 @@ object ScaleRehearsal {
         (id + rep.toLong * 1000000L, newText, lang, source, nChars)
       }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$Out/documents.parquet")
-
-    // embeddings: fresh seeded gaussians per replica (replica 0 = original)
-    val emb = spark.read.parquet(s"$Base/embeddings.parquet")
+      .repartition(partitions)
+      .write.mode("overwrite").parquet(s"$out/documents.parquet")
+    if (embeddings) spark.read.parquet(s"$Base/embeddings.parquet")
       .as[(Long, Array[Float], Long)]
-    emb.crossJoin(broadcast(reps)).as[(Long, Array[Float], Long, Int)]
+      .crossJoin(broadcast(reps)).as[(Long, Array[Float], Long, Int)]
       .map { case (id, vec, label, rep) =>
         val v = if (rep == 0) vec else {
           val rnd = new scala.util.Random(Seed ^ (rep.toLong << 33) ^ id)
@@ -132,8 +109,14 @@ object ScaleRehearsal {
       }
       .toDF("vec_id", "embedding", "label")
       .repartition(8)
-      .write.mode("overwrite").parquet(s"$Out/embeddings.parquet")
+      .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
+    graft.queries.RetrievalOps.resetStrideMemo()
+    graft.queries.LlmPipeline.resetDialMemos()
+    graft.core.Tables.resetSchemaMemo()
+  }
 
+  def gen(spark: SparkSession, factor: Int): Unit = {
+    Files.createDirectories(Paths.get(Out))
     // remaining tables copied 1:1 so every registered query still runs
     Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
       .foreach { t =>
@@ -147,43 +130,11 @@ object ScaleRehearsal {
           }
         } else Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING)
       }
+    replicate(spark, factor, Out, 32, embeddings = true)
     Seq("events", "documents", "embeddings").foreach { t =>
       val n = spark.read.parquet(s"$Out/$t.parquet").count()
       println(s"[scale-gen] $t: $n rows")
     }
-    // the dial memos are keyed by dir path — this rewrite just changed
-    // what that path holds, so stale entries must go (ADVICE r15)
-    graft.queries.RetrievalOps.resetStrideMemo()
-    graft.queries.LlmPipeline.resetDialMemos()
-    graft.core.Tables.resetSchemaMemo()
-  }
-
-  private def timeQuery(spark: SparkSession, name: String, dir: String): Double = {
-    def once(): Double = {
-      spark.sharedState.cacheManager.clearCache()
-      val t0 = System.nanoTime()
-      graft.core.CacheScope.scoped {
-        graft.SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
-    once() // cold: pays codegen once
-    math.min(once(), once())
-  }
-
-  private def timeShards(spark: SparkSession, dir: String): Double = {
-    def once(): Double = {
-      val out = Files.createTempDirectory("scale-shards").toString
-      spark.sharedState.cacheManager.clearCache()
-      val t0 = System.nanoTime()
-      graft.core.CacheScope.scoped {
-        graft.queries.LlmPipeline.writeTrainingShards(spark, dir, out, 32)
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
-    once()
-    math.min(once(), once())
   }
 
   /** Queries whose 10x wall ratio is super-linear BY PROTOCOL at
@@ -228,37 +179,28 @@ object ScaleRehearsal {
     // SURVEY section-2 tables; protocol-coupled super-linear queries
     // carry their reason from [[protocolNotes]] in the table and the
     // artifact, so "worst ratio" always reads against the right bar.
-    val queries = graft.SparkEntry.queries.keys.toSeq.sorted
+    def query(fn: (SparkSession, String) => DataFrame): String => Unit =
+      dir => Harness.noop(fn(spark, dir))
+    // plus the adaptive-stride rerank forms (the registered %-50 queries
+    // are quadratic by protocol at gated SFs, see [[protocolNotes]]) and
+    // the funnel->shards composition
+    val jobs = graft.SparkEntry.queries.toSeq.sortBy(_._1).map {
+      case (q, fn) => q -> query(fn)
+    } ++ Seq(
+      "q164_maxsim(adaptive-stride)" ->
+        query(graft.queries.RetrievalOps.maxsimRerankAdaptive),
+      "q165_matryoshka(adaptive-stride)" ->
+        query(graft.queries.RetrievalOps.matryoshkaAgreementAdaptive),
+      "writeTrainingShards" -> ((dir: String) =>
+        graft.queries.LlmPipeline.writeTrainingShards(spark, dir,
+          Files.createTempDirectory("scale-shards").toString, 32)))
     println(f"${"query"}%-28s ${"1x_sec"}%8s ${"10x_sec"}%8s ${"ratio"}%6s")
-    val rows = queries.map { q =>
-      val w1 = timeQuery(spark, q, Base)
-      val w10 = timeQuery(spark, q, Out)
+    val rows = jobs.map { case (q, job) =>
+      val w1 = Harness.bestOf2(spark)(job(Base))._1
+      val w10 = Harness.bestOf2(spark)(job(Out))._1
       val tag = if (protocolNotes.contains(q)) " [protocol]" else ""
       println(f"$q%-28s $w1%8.2f $w10%8.2f ${w10 / w1}%6.1f$tag")
       (q, w1, w10)
-    } ++ Seq[(String, (SparkSession, String) => DataFrame)](
-      ("q164_maxsim(adaptive-stride)", RetrievalAdaptive.maxsim),
-      ("q165_matryoshka(adaptive-stride)", RetrievalAdaptive.matryoshka))
-      .map { case (label, fn) =>
-        def t(dir: String): Double = {
-          def once(): Double = {
-            spark.sharedState.cacheManager.clearCache()
-            val t0 = System.nanoTime()
-            graft.core.CacheScope.scoped {
-              fn(spark, dir).write.format("noop").mode("overwrite").save()
-            }
-            (System.nanoTime() - t0) / 1e9
-          }
-          once(); math.min(once(), once())
-        }
-        val w1 = t(Base); val w10 = t(Out)
-        println(f"$label%-28s $w1%8.2f $w10%8.2f ${w10 / w1}%6.1f")
-        (label, w1, w10)
-      } :+ {
-      val w1 = timeShards(spark, Base)
-      val w10 = timeShards(spark, Out)
-      println(f"${"writeTrainingShards"}%-28s $w1%8.2f $w10%8.2f ${w10 / w1}%6.1f")
-      ("writeTrainingShards", w1, w10)
     }
     // one machine-readable line for ROUND_NOTES
     println("[scale-run] " + rows.map { case (q, w1, w10) =>
@@ -297,21 +239,11 @@ object ScaleRehearsal {
     println(f"${"embed near-dup banding"}%-28s ${"wall_s"}%8s ${"cand"}%10s ${"pairs"}%10s")
     val rows = Seq((Base, "1x @ 8 bits", 8), (Out, "10x @ 8 bits", 8),
       (Out, "10x @ 11 bits", 11)).map { case (dir, label, bits) =>
-      def once(): (Double, Long) = {
-        spark.sharedState.cacheManager.clearCache()
-        val t0 = System.nanoTime()
-        val n = graft.core.CacheScope.scoped {
-          graft.queries.LlmPipeline.embedNearDupPairs(spark, dir, bits).count()
-        }
-        ((System.nanoTime() - t0) / 1e9, n)
-      }
       val cand = graft.core.CacheScope.scoped {
         graft.queries.LlmPipeline.embedCandidatePairs(spark, dir, bits).count()
       }
-      once()
-      val (w1, n1) = once(); val (w2, n2) = once()
-      require(n1 == n2, "deterministic pair count")
-      val w = math.min(w1, w2)
+      val (w, n1) = Harness.bestOf2(spark)(
+        graft.queries.LlmPipeline.embedNearDupPairs(spark, dir, bits).count())
       println(f"$label%-28s $w%8.2f $cand%10d $n1%10d")
       (label, w, cand, n1)
     }
@@ -337,21 +269,11 @@ object ScaleRehearsal {
       (Out, "10x @ adaptive", None)).map { case (dir, label, forced) =>
       val n = graft.core.Tables.documents(spark, dir).count()
       val bits = forced.getOrElse(graft.queries.CorpusOps.bloomBitsFor(n))
-      def once(): (Double, Long, Long) = {
-        spark.sharedState.cacheManager.clearCache()
-        val t0 = System.nanoTime()
-        val (fpr, miss) = graft.core.CacheScope.scoped {
-          graft.queries.CorpusOps.bloomMembership(spark, dir, bits)
-            .agg(expr("sum(n_false_pos) * 1000000 div " +
-              "sum(n_probes - n_dups)"), expr("sum(n_missed)"))
-            .as[(Long, Long)].head()
-        }
-        ((System.nanoTime() - t0) / 1e9, fpr, miss)
-      }
-      once()
-      val (w1, fpr, miss) = once(); val (w2, fpr2, miss2) = once()
-      require(fpr == fpr2 && miss == miss2, "deterministic verdicts")
-      val w = math.min(w1, w2)
+      val (w, (fpr, miss)) = Harness.bestOf2(spark)(
+        graft.queries.CorpusOps.bloomMembership(spark, dir, bits)
+          .agg(expr("sum(n_false_pos) * 1000000 div " +
+            "sum(n_probes - n_dups)"), expr("sum(n_missed)"))
+          .as[(Long, Long)].head())
       println(f"$label%-28s $w%8.2f $fpr%10d $miss%8d (n=$n bits=$bits)")
       require(miss == 0L, "no-false-negative contract broken")
       (label, w, fpr, miss)
@@ -387,21 +309,11 @@ object ScaleRehearsal {
     println(f"${"text near-dup banding"}%-28s ${"wall_s"}%8s ${"cand"}%10s ${"pairs"}%10s")
     val rows = Seq((Base, "1x @ r=4", 4), (Out, "10x @ r=4", 4),
       (Out, s"10x @ r=$adaptive", adaptive)).map { case (dir, label, r) =>
-      def once(): (Double, Long) = {
-        spark.sharedState.cacheManager.clearCache()
-        val t0 = System.nanoTime()
-        val n = graft.core.CacheScope.scoped {
-          graft.queries.LlmPipeline.textNearDupPairs(spark, dir, r).count()
-        }
-        ((System.nanoTime() - t0) / 1e9, n)
-      }
       val cand = graft.core.CacheScope.scoped {
         graft.queries.LlmPipeline.textCandidatePairs(spark, dir, r).count()
       }
-      once()
-      val (w1, n1) = once(); val (w2, n2) = once()
-      require(n1 == n2, "deterministic pair count")
-      val w = math.min(w1, w2)
+      val (w, n1) = Harness.bestOf2(spark)(
+        graft.queries.LlmPipeline.textNearDupPairs(spark, dir, r).count())
       println(f"$label%-28s $w%8.2f $cand%10d $n1%10d")
       (label, r, w, cand, n1)
     }
@@ -432,193 +344,57 @@ object ScaleRehearsal {
     * ADAPTIVE rows-per-band dial) and q133 (chunk dedup + rebuild, the
     * window-heaviest L operator) against it, recording wall AND the
     * shuffle bytes the run actually wrote — the binding resource at
-    * cluster scale. Both probed queries read only the documents table, so
-    * the derivation stays disk-proportionate to what the probe needs.
+    * cluster scale. The probed queries read only the documents and events
+    * tables, so only those are derived, keeping the disk cost
+    * proportionate to what the probe needs.
     */
   def probe100(spark: SparkSession, factor: Int): Unit = {
-    import spark.implicits._
     val out = s"target/scale$factor"
-    Files.createDirectories(Paths.get(out))
-    val docs = spark.read.parquet(s"$Base/documents.parquet")
-      .as[(Long, String, String, String, Long)]
-    val reps = spark.range(factor).select(col("id").cast("int").as("rep"))
-    docs.crossJoin(broadcast(reps)).as[(Long, String, String, String, Long, Int)]
-      .map { case (id, text, lang, source, nChars, rep) =>
-        val newText = if (rep == 0) text else {
-          val words = text.split("\\s+").toSeq
-          val rnd = new scala.util.Random(Seed ^ (rep.toLong << 32) ^ id)
-          rnd.shuffle(words).mkString(" ")
-        }
-        (id + rep.toLong * 1000000L, newText, lang, source, nChars)
-      }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .repartition(64)
-      .write.mode("overwrite").parquet(s"$out/documents.parquet")
-    // events at factor x too (same span-shift replica scheme as [[gen]]):
-    // the r19 full-registry table put one EVENTS-based query (q62) above
-    // the 6x explanation bar, so its probe needs the table here
-    val ev = spark.read.parquet(s"$Base/events.parquet")
-      .withColumn("ts", col("ts").cast("timestamp"))
-    val (minUs, maxUs) = ev
-      .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))))
-      .as[(Long, Long)].head()
-    val spanUs = maxUs - minUs + 3600L * 1000000L
-    ev.crossJoin(broadcast(reps))
-      .select(
-        (col("event_id") + col("rep") * lit(1000000L)).as("event_id"),
-        timestamp_micros(unix_micros(col("ts")) + col("rep") * lit(spanUs))
-          .as("ts"),
-        (col("user_id") + col("rep") * lit(1000000L)).as("user_id"),
-        col("event_type"), col("value"), col("props"))
-      .repartition(64)
-      .write.mode("overwrite").parquet(s"$out/events.parquet")
-    // the probe corpus just replaced what these paths hold
-    graft.queries.RetrievalOps.resetStrideMemo()
-    graft.queries.LlmPipeline.resetDialMemos()
-    graft.core.Tables.resetSchemaMemo()
+    replicate(spark, factor, out, 64, embeddings = false)
     val n = spark.read.parquet(s"$out/documents.parquet").count()
     println(s"[scale-probe] documents at ${factor}x: $n rows -> " +
       s"rowsPerBand=${graft.functions.Sketches.rowsPerBandFor(n)}")
-
-    // shuffle-byte meter: aggregated per completed stage off the listener
-    // bus (async - drained by a bounded wait before reading)
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val stages = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        shuffleBytes.addAndGet(
-          sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        stages.incrementAndGet()
+    // beside q36, the probed queries and the term each one scales by:
+    //  - q133 chunk dedup + rebuild, the window-heaviest L operator;
+    //  - q141 the sampled-shingle similarity graph: edge count, bounded by
+    //    the hot-bucket guard (see the 10x table's q141 note);
+    //  - q156 cluster-coherent split repair: one per-ck aggregate + one
+    //    shuffle-on-ck join, the governance op a nightly 100 TB run
+    //    executes verbatim;
+    //  - q163 BM25: the map-side-combined (doc, gram) aggregate must keep
+    //    the shuffle proportional to the postings, not the exploded words;
+    //  - q171 MAD fence: two per-source rank windows (the order-statistic
+    //    sort the L59 sketch path would replace at production);
+    //  - q205, q216, q103: the banded candidate kernel (candidate volume
+    //    under the adaptive band dial) plus exact re-joins per candidate;
+    //  - q206 Spearman agreement: two source-partitioned rank windows;
+    //  - q209 conditional entropy: postings-shaped shuffle;
+    //  - q220 transitivity audit: wedge growth, bounded by the per-node
+    //    degree cap (64) where an uncapped corpus would be quadratic;
+    //  - q167 vs q224, q171 vs q225: the sketch-swap crossover, exact sort
+    //    and rank windows against their registered sketch twins;
+    //  - q116, q62: the full-registry 10x ratios above the ~6x explanation
+    //    bar; q116's shuffle must stay vocab/|sources|-bounded, q62's near
+    //    zero (its ratio is the absence of fixed overhead).
+    val probed = Seq("q133_chunk_dedup_rebuild", "q141_graph_centrality",
+      "q156_split_leakage_repair", "q163_bm25_topk", "q171_mad_outliers",
+      "q205_bbit_minhash_calibration", "q206_signal_rank_agreement",
+      "q209_conditional_entropy", "q220_transitivity_audit",
+      "q216_containment_calibration", "q103_minhash_calibration",
+      "q167_curriculum_stages", "q224_curriculum_stages_sketched",
+      "q225_mad_outliers_sketched", "q116_term_divergence",
+      "q62_property_cleaning")
+    val jobs = (s"q36 kernel @${factor}x adaptive-r" -> (() =>
+        graft.queries.LlmPipeline.textNearDupPairs(spark, out).count())) +:
+      probed.map(q => s"${q.takeWhile(_ != '_')} @${factor}x" -> (() =>
+        graft.SparkEntry.queries(q)(spark, out).count()))
+    val rows = Harness.withShuffleMeter(spark) { meter =>
+      jobs.map { case (label, job) =>
+        val (pass, sb, n) = meter.timed(spark)(job())
+        println(f"$label%-34s ${pass.wall}%8.2fs rows=$n%10d shuffle=${sb >> 20}%6d MB")
+        (label, pass.wall, n, sb)
       }
     }
-    spark.sparkContext.addSparkListener(listener)
-    def measured(label: String)(body: => Long): (String, Double, Long, Long) = {
-      spark.sharedState.cacheManager.clearCache()
-      Thread.sleep(300); shuffleBytes.set(0L) // drain prior stage events
-      val t0 = System.nanoTime()
-      val rows = graft.core.CacheScope.scoped(body)
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // let the last stage's completion event land
-      val sb = shuffleBytes.get()
-      println(f"$label%-34s $wall%8.2fs rows=$rows%10d shuffle=${sb >> 20}%6d MB")
-      (label, wall, rows, sb)
-    }
-    val rows = Seq(
-      measured(s"q36 kernel @${factor}x adaptive-r") {
-        graft.queries.LlmPipeline.textNearDupPairs(spark, out).count()
-      },
-      measured(s"q133 @${factor}x") {
-        graft.SparkEntry.queries("q133_chunk_dedup_rebuild")(spark, out)
-          .count()
-      },
-      // round-15 additions: the sampled-shingle similarity graph (edge
-      // count is the scaling term; the hot-bucket guard is the dial
-      // that binds here — see the 10x table's q141 note) and the
-      // cluster-coherent split repair (one per-ck aggregate + one
-      // shuffle-on-ck join — the governance op a nightly 100 TB run
-      // would execute verbatim)
-      measured(s"q141 @${factor}x") {
-        graft.SparkEntry.queries("q141_graph_centrality")(spark, out)
-          .count()
-      },
-      measured(s"q156 @${factor}x") {
-        graft.SparkEntry.queries("q156_split_leakage_repair")(spark, out)
-          .count()
-      },
-      // round-16 additions: BM25 (the postings explode is the
-      // row-multiplicative term — the probe shows whether the
-      // map-side-combined (doc, gram) aggregate keeps the shuffle
-      // proportional to the POSTINGS, not the exploded words) and the
-      // MAD fence (two per-source rank windows at 500k rows/source-set —
-      // the order-statistic sort is the term the L59 sketch path would
-      // replace at production)
-      measured(s"q163 @${factor}x") {
-        graft.SparkEntry.queries("q163_bm25_topk")(spark, out).count()
-      },
-      measured(s"q171 @${factor}x") {
-        graft.SparkEntry.queries("q171_mad_outliers")(spark, out).count()
-      },
-      // round-16 additions: the b-bit calibration (the full LSH
-      // candidate pipeline + sig re-joins — candidate volume under the
-      // adaptive band dial is the scaling term), the Spearman
-      // agreement (the L86 + L74 kernel passes + two source-
-      // partitioned rank windows at 100× doc count — the window sort
-      // is what the L43 sample protocol would bound at production),
-      // and the conditional entropy (one native bigram pass + the
-      // (source, word) marginal join — postings-shaped shuffle)
-      measured(s"q205 @${factor}x") {
-        graft.SparkEntry.queries("q205_bbit_minhash_calibration")(
-          spark, out).count()
-      },
-      measured(s"q206 @${factor}x") {
-        graft.SparkEntry.queries("q206_signal_rank_agreement")(
-          spark, out).count()
-      },
-      measured(s"q209 @${factor}x") {
-        graft.SparkEntry.queries("q209_conditional_entropy")(
-          spark, out).count()
-      },
-      // round-17 additions (VERDICT r16 #4/#5): the transitivity audit
-      // — the suite's most expensive query — whose wedge growth the
-      // r17 per-node degree cap (64) now bounds by construction: the
-      // probe measures the capped Σdeg² where an uncapped mirror-heavy
-      // corpus would be quadratic; and the containment/minhash
-      // calibration pair, which share q205's banded candidate kernel
-      // but had no probe of their own (their extra term is the exact
-      // intersect re-join per candidate)
-      measured(s"q220 @${factor}x") {
-        graft.SparkEntry.queries("q220_transitivity_audit")(
-          spark, out).count()
-      },
-      measured(s"q216 @${factor}x") {
-        graft.SparkEntry.queries("q216_containment_calibration")(
-          spark, out).count()
-      },
-      measured(s"q103 @${factor}x") {
-        graft.SparkEntry.queries("q103_minhash_calibration")(
-          spark, out).count()
-      },
-      // round-18 additions (VERDICT r17 #3): the sketch-swap crossover
-      // measured where the tier's thesis lives — the exact forms
-      // against their registered sketch twins at 100× (the combined-key
-      // id domain widened to 2^27 this round, so the sketched forms run
-      // VERBATIM on the replica corpus instead of raising the guard).
-      // q167-vs-q224: the corpus-wide single-partition ntile sort vs
-      // one mergeable hash aggregate + broadcast cuts. q171-vs-q225:
-      // two per-source rank windows vs two bottom-k aggregates (q171
-      // itself is measured above).
-      measured(s"q167 @${factor}x") {
-        graft.SparkEntry.queries("q167_curriculum_stages")(
-          spark, out).count()
-      },
-      measured(s"q224 @${factor}x") {
-        graft.SparkEntry.queries("q224_curriculum_stages_sketched")(
-          spark, out).count()
-      },
-      measured(s"q225 @${factor}x") {
-        graft.SparkEntry.queries("q225_mad_outliers_sketched")(
-          spark, out).count()
-      },
-      // round-19 additions (VERDICT r18 #1): the two full-registry 10x
-      // ratios above the ~6x explanation bar, probed with shuffle-byte
-      // accounting. q116 runs three exploded-word corpus passes (per-
-      // source token counts, the global top-64 vocabulary, the per-
-      // (source, top-word) counts) — the scan is the cost and the
-      // shuffle must stay vocab/|sources|-bounded, not token-bounded.
-      // q62 is a pure map-side JSON build + single-parse chain per
-      // event — wall should track the row count with near-zero shuffle
-      // (its 10x ratio is the absence of fixed overhead, not a scaling
-      // term).
-      measured(s"q116 @${factor}x") {
-        graft.SparkEntry.queries("q116_term_divergence")(
-          spark, out).count()
-      },
-      measured(s"q62 @${factor}x") {
-        graft.SparkEntry.queries("q62_property_cleaning")(
-          spark, out).count()
-      })
-    spark.sparkContext.removeSparkListener(listener)
     emit("probe100", rows.map { case (l, w, r, sb) =>
       s"""{"label":"$l","wall":${num(w)},"rows":$r,"shuffle_bytes":$sb}"""
     }.mkString(s"""[{"factor":$factor,"docs":$n},""", ",", "]"))
@@ -647,17 +423,6 @@ object ScaleRehearsal {
   def probeSwap(spark: SparkSession,
       ns: Seq[Long] = Seq(5000000L, 30000000L, 100000000L)): Unit = {
     import graft.queries.SketchSwapOps
-    // synthetic keys never touch Tables, whose loader normally wires
-    // the engine functions into ad-hoc sessions — wire them here
-    graft.plans.GraftExtensions.register(spark)
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        shuffleBytes.addAndGet(
-          sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
-    spark.sparkContext.addSparkListener(listener)
     def keys(n: Long) = spark.range(n).select(
       col("id").as("doc_id"),
       // deterministic pseudo-quality in [0, 10^6): a Knuth multiplicative
@@ -666,71 +431,66 @@ object ScaleRehearsal {
       ((col("id") * 2654435761L) % 1000003L).as("q_u"))
       .withColumn("key",
         SketchSwapOps.combinedKey(col("q_u"), col("doc_id")))
-    def measured(label: String)(body: => Seq[(Long, Long)])
-        : (String, Double, Long, Seq[(Long, Long)]) = {
-      spark.sharedState.cacheManager.clearCache()
-      Thread.sleep(300); shuffleBytes.set(0L)
-      val t0 = System.nanoTime()
-      val stages = body
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500)
-      val sb = shuffleBytes.get()
-      println(f"$label%-26s $wall%8.2fs shuffle=${sb >> 20}%6d MB stages=${stages.map(_._2).mkString(",")}")
-      (label, wall, sb, stages)
-    }
-    val rows = ns.flatMap { n =>
-      val exact = measured(s"exact ntile  N=$n") {
-        keys(n).withColumn("stage", ntile(4).over(
-            org.apache.spark.sql.expressions.Window
-              .orderBy(col("key"))).cast("long"))
-          .groupBy(col("stage")).agg(count(lit(1)).as("n_docs"))
-          .orderBy(col("stage"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val rows = Harness.withShuffleMeter(spark) { meter =>
+      def measured(label: String)(body: => Seq[(Long, Long)])
+          : (String, Double, Long, Seq[(Long, Long)]) = {
+        val (pass, sb, stages) = meter.timed(spark)(body)
+        println(f"$label%-26s ${pass.wall}%8.2fs shuffle=${sb >> 20}%6d MB stages=${stages.map(_._2).mkString(",")}")
+        (label, pass.wall, sb, stages)
       }
-      val sketch = measured(s"sketch cuts  N=$n") {
-        val base = keys(n)
-        val cuts = base.agg(count(lit(1)).as("n"),
-            call_function("graft_bottomk", col("key"),
-              lit(8192), lit("probeswap")).as("sample"))
-          .withColumn("sample_n", size(col("sample")).cast("long"))
-        val cutCols = (1L until 4L).map { t =>
-          expr(SketchSwapOps.idxExpr(
-            SketchSwapOps.tileCumExpr(t, 4L), "n")).as(s"c$t")
+      ns.flatMap { n =>
+        val exact = measured(s"exact ntile  N=$n") {
+          keys(n).withColumn("stage", ntile(4).over(
+              org.apache.spark.sql.expressions.Window
+                .orderBy(col("key"))).cast("long"))
+            .groupBy(col("stage")).agg(count(lit(1)).as("n_docs"))
+            .orderBy(col("stage"))
+            .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
         }
-        base.crossJoin(broadcast(cuts.select(cutCols: _*)))
-          .withColumn("stage", (1L until 4L)
-            .map(t => when(col("key") > col(s"c$t"), 1L).otherwise(0L))
-            .foldLeft(lit(1L))(_ + _))
-          .groupBy(col("stage")).agg(count(lit(1)).as("n_docs"))
-          .orderBy(col("stage"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      }
-      // the sketch is only a fair timing if it is also RIGHT: at
-      // k=8192 < N the cuts are estimates with rank-space standard
-      // error 1/(2√k) ≈ 0.55% each (q229/q233's budget); a stage
-      // population is the difference of two cut ranks (σ ≈ 0.78%), so
-      // assert within 3σ ≈ 2.4% — measured at N=30M: worst 1.07%
-      val exactPop = exact._4.map(_._2)
-      val sketchPop = sketch._4.map(_._2)
-      require(exactPop.map(_.toDouble).sum == n.toDouble)
-      require(sketchPop.sum == n, "sketch partitions the corpus")
-      exactPop.zip(sketchPop).foreach { case (e, s) =>
-        require(math.abs(e - s) <= n * 24 / 1000,
-          s"stage populations within the 3-sigma sketch budget at N=$n: $e vs $s")
-      }
-      Seq(exact, sketch).map { case (l, w, sb, st) =>
-        s"""{"label":"$l","n":$n,"wall":${num(w)},"shuffle_bytes":$sb,""" +
-          s""""stages":[${st.map(_._2).mkString(",")}]}"""
+        val sketch = measured(s"sketch cuts  N=$n") {
+          val base = keys(n)
+          val cuts = base.agg(count(lit(1)).as("n"),
+              call_function("graft_bottomk", col("key"),
+                lit(8192), lit("probeswap")).as("sample"))
+            .withColumn("sample_n", size(col("sample")).cast("long"))
+          val cutCols = (1L until 4L).map { t =>
+            expr(SketchSwapOps.idxExpr(
+              SketchSwapOps.tileCumExpr(t, 4L), "n")).as(s"c$t")
+          }
+          base.crossJoin(broadcast(cuts.select(cutCols: _*)))
+            .withColumn("stage", (1L until 4L)
+              .map(t => when(col("key") > col(s"c$t"), 1L).otherwise(0L))
+              .foldLeft(lit(1L))(_ + _))
+            .groupBy(col("stage")).agg(count(lit(1)).as("n_docs"))
+            .orderBy(col("stage"))
+            .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+        }
+        // the sketch is only a fair timing if it is also RIGHT: at
+        // k=8192 < N the cuts are estimates with rank-space standard
+        // error 1/(2√k) ≈ 0.55% each (q229/q233's budget); a stage
+        // population is the difference of two cut ranks (σ ≈ 0.78%), so
+        // assert within 3σ ≈ 2.4% — measured at N=30M: worst 1.07%
+        val exactPop = exact._4.map(_._2)
+        val sketchPop = sketch._4.map(_._2)
+        require(exactPop.map(_.toDouble).sum == n.toDouble)
+        require(sketchPop.sum == n, "sketch partitions the corpus")
+        exactPop.zip(sketchPop).foreach { case (e, s) =>
+          require(math.abs(e - s) <= n * 24 / 1000,
+            s"stage populations within the 3-sigma sketch budget at N=$n: $e vs $s")
+        }
+        Seq(exact, sketch).map { case (l, w, sb, st) =>
+          s"""{"label":"$l","n":$n,"wall":${num(w)},"shuffle_bytes":$sb,""" +
+            s""""stages":[${st.map(_._2).mkString(",")}]}"""
+        }
       }
     }
-    spark.sparkContext.removeSparkListener(listener)
     emit("probeswap", rows.mkString("[", ",", "]"))
   }
 
   def main(args: Array[String]): Unit = {
     val mode = if (args.nonEmpty) args(0) else "all"
     val factor = if (args.length > 1) args(1).toInt else 10
-    val spark = session()
+    val spark = Harness.session()
     mode match {
       case "gen" => gen(spark, factor)
       case "run" => run(spark)

@@ -3,21 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs (one per suite, lazy). */
+/** Shared local SparkSession for specs (one per suite, lazy), from the
+  * engine's one session factory. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // the shared session is reused across suites — register the graft
-    // native functions up front (idempotent) so no spec depends on some
-    // OTHER suite having touched the table loader first
-    graft.plans.GraftExtensions.register(s)
-    s
-  }
+  // 4 threads whatever the host: plan-shape assertions must not depend
+  // on its core count
+  lazy val spark: SparkSession = graft.tools.Harness.session(cpus = 4)
 
   /** Flatten an executed plan THROUGH adaptive stage boundaries — AQE wraps
     * materialized stages in leaf QueryStageExec nodes, so a plain collect
