@@ -1,10 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Case-insensitive "any element contains the needle" as a native loop
@@ -22,39 +18,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * Semantics match the lambda form: null elements are skipped (a null
   * lambda result is not true), a null array yields null.
   */
-case class AnyContainsExpression(child: Expression, needle: String)
-    extends UnaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_any_contains needs ARRAY<STRING>, got $t")
-  }
-
-  /** Lowercased needle, built once and shipped as a codegen reference. */
-  lazy val needleLower: UTF8String = UTF8String.fromString(needle.toLowerCase)
-
-  override protected def nullSafeEval(input: Any): Any =
-    AnyContainsExpression.anyContains(input.asInstanceOf[ArrayData], needleLower)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val nRef = ctx.addReferenceObj("needle", needleLower,
-      "org.apache.spark.unsafe.types.UTF8String")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.AnyContainsExpression.anyContains($c, $nRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): AnyContainsExpression =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_any_contains"
-}
-
 object AnyContainsExpression {
-  /** Static kernel the generated code calls. */
+  /** The `graft_any_contains` kernel; the needle dial is lowercased once
+    * on the driver.
+    */
   def anyContains(arr: ArrayData, needleLower: UTF8String): Boolean = {
     var i = 0
     val n = arr.numElements()

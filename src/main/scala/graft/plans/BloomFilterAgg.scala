@@ -2,14 +2,13 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 
 /** Bloom-filter membership sketch as a native `TypedImperativeAggregate`
-  * plus its probe expression — the bounded-memory form of the corpus
+  * plus its probe kernel — the bounded-memory form of the corpus
   * membership test behind incremental exact dedup (SURVEY §2.11a L31/L64).
   *
   * At 100 TB the exact "is this fingerprint already in the corpus" check
@@ -131,7 +130,12 @@ object BloomFilterAgg {
     }
   }
 
-  /** Static probe kernel the generated code calls: all `k` bits set. */
+  /** The `graft_bloom_probe(bitmap, fingerprint, k)` kernel: true iff
+    * every one of the `k` probe bits for the fingerprint is set in the
+    * bitmap (the filter width is carried by the bitmap itself:
+    * m = 8 · length). A [[KernelCall]], so the broadcast bitmap probe is
+    * map-side codegen'd work — the production membership path.
+    */
   def probe(buf: Array[Byte], h: Long, k: Int): Boolean = {
     val m = buf.length.toLong << 3
     var i = 0
@@ -142,41 +146,4 @@ object BloomFilterAgg {
     }
     true
   }
-}
-
-/** `graft_bloom_probe(bitmap, fingerprint, k)` — true iff every one of the
-  * `k` probe bits for `fingerprint` is set in `bitmap` (the filter width is
-  * carried by the bitmap itself: m = 8 · length). Stays inside
-  * WholeStageCodegen via a single static-call `doGenCode`, so the broadcast
-  * bitmap probe is map-side codegen'd work — the production membership path.
-  */
-case class BloomProbeExpression(left: Expression, right: Expression, k: Int)
-    extends BinaryExpression {
-
-  require(k >= 1 && k <= 16, s"graft_bloom_probe k must be in [1, 16], got $k")
-
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, LongType | IntegerType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_bloom_probe needs (BINARY, BIGINT), got ($l, $r)")
-    }
-
-  override protected def nullSafeEval(bm: Any, h: Any): Any =
-    BloomFilterAgg.probe(bm.asInstanceOf[Array[Byte]],
-      h.asInstanceOf[Number].longValue(), k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (bm, h) => {
-      s"${ev.value} = graft.plans.BloomFilterAgg.probe($bm, (long) $h, $k);"
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): BloomProbeExpression =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "graft_bloom_probe"
 }

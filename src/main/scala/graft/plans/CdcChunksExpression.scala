@@ -1,11 +1,9 @@
 package graft.plans
 
-
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The L53 content-defined-chunking frame as ONE native loop expression —
@@ -35,28 +33,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * order; null text → null (the exploded relational form dropped those
   * rows the same way).
   */
-case class CdcChunksExpression(child: Expression, mod: Long)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  require(mod >= 1, s"graft_cdc_chunks mod must be >= 1, got $mod")
-
-  override def dataType: DataType = CdcChunksExpression.Schema
-  override def nullable: Boolean = child.nullable
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-
-  override protected def nullSafeEval(input: Any): Any =
-    CdcChunksExpression.chunks(input.asInstanceOf[UTF8String], mod)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.CdcChunksExpression.chunks($c, ${mod}L)")
-
-  override protected def withNewChildInternal(newChild: Expression): CdcChunksExpression =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_cdc_chunks"
-}
-
 object CdcChunksExpression {
 
   val Schema: ArrayType = ArrayType(StructType(Seq(
@@ -66,22 +42,9 @@ object CdcChunksExpression {
     StructField("chunk_text", StringType, nullable = false))),
     containsNull = false)
 
-  /** Low-60-bit md5 prefix from a prepared digest, identical to
-    * `Sketches.h64Scala` / `parseLong(hex(0,15), 16)`: the first 15 hex
-    * digits are the digest's first 60 bits, i.e. the big-endian
-    * first-8-bytes Long unsigned-shifted right by 4 (no hex round trip).
-    */
-  private def h64(md: java.security.MessageDigest): Long = {
-    val d = md.digest()
-    (((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
-      ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |
-      ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
-      ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)) >>> 4
-  }
-
   private val Space = Array[Byte](0x20)
 
-  /** Static kernel the generated code calls — byte-level ([[WordBytes]]):
+  /** The `graft_cdc_chunks` kernel — byte-level ([[WordBytes]]):
     * word and 3-gram hashes digest the UTF-8 byte slices directly (a
     * word's UTF-8 bytes ARE its slice; the 3-gram's bytes are the three
     * slices joined by 0x20), so no String is ever built except the
@@ -90,7 +53,7 @@ object CdcChunksExpression {
   def chunks(s: UTF8String, mod: Long): ArrayData = {
     val w = WordBytes.split(s)
     val n = w.count
-    val md = java.security.MessageDigest.getInstance("MD5")
+    val md = H64Expression.digest()
     val out = new java.util.ArrayList[AnyRef](4)
     var chunkId = 0L
     var start = 0
@@ -98,18 +61,16 @@ object CdcChunksExpression {
     var nw = 0L
     var p = 0
     while (p < n) {
-      md.reset()
       md.update(w.bytes, w.offs(p), w.lens(p))
-      cfp += (h64(md) % 4294967296L) * (p - start + 1)
+      cfp += (md.h64() % 4294967296L) * (p - start + 1)
       nw += 1
       val boundary = p + 2 <= n - 1 && {
-        md.reset()
         md.update(w.bytes, w.offs(p), w.lens(p))
         md.update(Space)
         md.update(w.bytes, w.offs(p + 1), w.lens(p + 1))
         md.update(Space)
         md.update(w.bytes, w.offs(p + 2), w.lens(p + 2))
-        h64(md) % mod == 0
+        md.h64() % mod == 0
       }
       if (boundary) {
         out.add(new GenericInternalRow(Array[Any](chunkId, cfp, nw,

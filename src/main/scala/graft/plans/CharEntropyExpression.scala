@@ -1,8 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The L74 integer-ladder character-entropy proxy as a native loop
@@ -24,31 +21,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * text. This expression computes it in one codegen'd pass: the whole
   * entropy probe becomes a map-side projection with zero shuffles.
   */
-case class CharEntropyExpression(child: Expression, cap: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  require(cap >= 1, s"graft_char_entropy cap must be >= 1, got $cap")
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-
-  override protected def nullSafeEval(input: Any): Any =
-    CharEntropyExpression.entropyQ(input.asInstanceOf[UTF8String], cap)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.CharEntropyExpression.entropyQ($c, $cap)")
-
-  override protected def withNewChildInternal(newChild: Expression): CharEntropyExpression =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_char_entropy"
-}
-
 object CharEntropyExpression {
 
-  /** Static kernel the generated code calls. Callers guarantee
+  /** The `graft_char_entropy` kernel. Callers guarantee
     * length(text) >= 1 (the registered queries filter empty docs first);
     * a zero-length input would divide by zero exactly as the relational
     * form's empty group never existed.

@@ -1,8 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** q121's hash-classifier document score as ONE native loop expression —
@@ -17,59 +14,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * Returns the summed score, or null when the document has no non-empty
   * words — exactly the rows the legacy explode + aggregate dropped.
   */
-case class ClsScoreExpression(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-
-  override protected def nullSafeEval(input: Any): Any =
-    ClsScoreExpression.score(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val f = "graft.plans.ClsScoreExpression.score"
-    // fresh local: a fixed name would collide if two instances land in
-    // one codegen scope (Janino failure -> whole-stage fallback)
-    val r = ctx.freshName("clsScore")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      java.lang.Long $r = $f($c);
-      ${ev.isNull} = $r == null;
-      ${ev.value} = ${ev.isNull} ? -1L : $r.longValue();
-    """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): ClsScoreExpression =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_cls_score"
-}
-
 object ClsScoreExpression {
-
-  private def h64(md: java.security.MessageDigest): Long = {
-    val d = md.digest()
-    (((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
-      ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |
-      ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
-      ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)) >>> 4
-  }
-
-  /** Static kernel the generated code calls; null when no non-empty
-    * words survive the split.
+  /** The `graft_cls_score` kernel; null when no non-empty words survive
+    * the split.
     */
   def score(s: UTF8String): java.lang.Long = {
     val w = WordBytes.split(s.toLowerCase)
-    val md = java.security.MessageDigest.getInstance("MD5")
+    val md = H64Expression.digest()
     var sum = 0L
     var seen = false
     var i = 0
     while (i < w.count) {
       if (w.lens(i) > 0) {
         seen = true
-        md.reset()
         md.update(w.bytes, w.offs(i), w.lens(i))
-        sum += (h64(md) % 1024L) * 2654435761L % 1001L - 500L
+        sum += (md.h64() % 1024L) * 2654435761L % 1001L - 500L
       }
       i += 1
     }

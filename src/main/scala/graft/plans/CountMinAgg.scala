@@ -2,14 +2,13 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 
 /** Count-min frequency sketch as a native `TypedImperativeAggregate` plus
-  * its point-query expression — the frequency analog of the L64 Bloom
+  * its point-query kernel — the frequency analog of the L64 Bloom
   * membership filter (one-sided error in the other direction: an estimate
   * can only OVERcount, never undercount).
   *
@@ -143,7 +142,8 @@ object CountMinAgg {
     (0x47434D53L << 32) | (FormatVersion << 16) |
       (depth.toLong << 8) | widthLog2.toLong
 
-  /** Static point-query kernel: min over the depth rows of the counter at
+  /** The `graft_cms_query(sketch, fingerprint, depth)` kernel, a
+    * [[KernelCall]]: min over the depth rows of the counter at
     * this fingerprint's cell. Geometry (depth, width) is validated against
     * the sketch's own header — a sketch built with a different depth than
     * queried fails loudly here instead of reading shifted rows as counters.
@@ -175,40 +175,4 @@ object CountMinAgg {
     }
     best
   }
-}
-
-/** `graft_cms_query(sketch, fingerprint, depth)` — the point-frequency
-  * estimate: min over depth rows. Single static call in `doGenCode`, so
-  * broadcast-sketch probing stays inside WholeStageCodegen.
-  */
-case class CmsQueryExpression(left: Expression, right: Expression, depth: Int)
-    extends BinaryExpression {
-
-  require(depth >= 1 && depth <= 8,
-    s"graft_cms_query depth must be in [1, 8], got $depth")
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, LongType | IntegerType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_cms_query needs (BINARY, BIGINT), got ($l, $r)")
-    }
-
-  override protected def nullSafeEval(bm: Any, h: Any): Any =
-    CountMinAgg.query(bm.asInstanceOf[Array[Byte]],
-      h.asInstanceOf[Number].longValue(), depth)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (bm, h) => {
-      s"${ev.value} = graft.plans.CountMinAgg.query($bm, (long) $h, $depth);"
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CmsQueryExpression =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "graft_cms_query"
 }

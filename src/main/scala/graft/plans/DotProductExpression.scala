@@ -1,10 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Fixed-order embedding dot product as a native loop expression.
   *
@@ -14,8 +10,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * surrounding hash aggregate (the q78 pair subgraph does exactly this)
   * several unrolled dots and norms land in a single generated method and
   * blow the JVM's 64 KB bytecode limit, so Spark silently falls back to an
-  * interpreted aggregate. This node generates one static call: constant
-  * bytecode size at any width, stays inside WholeStageCodegen, runs a
+  * interpreted aggregate. As a [[KernelCall]] it is one static call:
+  * constant bytecode size at any width, inside WholeStageCodegen, a
   * tight JIT-able loop.
   *
   * Bit-for-bit parity with the unrolled form (and so with the DuckDB
@@ -30,76 +26,33 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * fires in practice, but the contract is pinned so the expression can
   * never diverge from the oracle on degenerate input).
   */
-case class DotProductExpression(left: Expression, right: Expression, dims: Int,
-    offset: Int = 0)
-    extends BinaryExpression {
-
-  require(dims >= 1, s"dims must be positive, got $dims")
-  require(offset >= 0, s"offset must be non-negative, got $offset")
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  private lazy val leftFloat: Boolean =
-    left.dataType.asInstanceOf[ArrayType].elementType == FloatType
-  private lazy val rightFloat: Boolean =
-    right.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType | DoubleType, _), ArrayType(FloatType | DoubleType, _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"graft_dot needs (ARRAY<FLOAT|DOUBLE>, ARRAY<FLOAT|DOUBLE>), got ($l, $r)")
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    DotProductExpression.dot(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], dims, offset,
-      leftFloat, rightFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val boxed = ctx.freshName("dotResult")
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      s"""
-         |java.lang.Double $boxed = graft.plans.DotProductExpression.dot(
-         |  $a, $b, $dims, $offset, $leftFloat, $rightFloat);
-         |if ($boxed == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $boxed.doubleValue();
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProductExpression =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "graft_dot"
-}
-
 object DotProductExpression {
-  /** Static kernel the generated code calls: left-associated
-    * sum(a[offset+i] * b[offset+i]) over `dims` elements starting at
-    * `offset` (0 = whole-vector dot; a non-zero offset is the
-    * product-quantization subspace window), float inputs widened to
-    * double per element. Boxed so NULL (null element / short array)
-    * survives the codegen boundary.
+  /** The `graft_dot` kernel: the dot over the window of `dims` elements
+    * starting at `offset` on both sides (0 = whole-vector dot; a non-zero
+    * offset is the product-quantization subspace window).
     */
-  def dot(a: ArrayData, b: ArrayData, dims: Int, offset: Int,
+  def dotAt(a: ArrayData, b: ArrayData, dims: Int, offset: Int,
+      aFloat: Boolean, bFloat: Boolean): java.lang.Double =
+    dot(a, offset, b, offset, dims, aFloat, bFloat)
+
+  /** Left-associated sum(a[aOff+i] * b[bOff+i]) over `dims` elements,
+    * float inputs widened to double per element — the one dot loop of
+    * `graft_dot` and of [[MaxSimExpression]]'s token pairs. NULL when a
+    * window runs past its array or holds a NULL element (boxed, so the
+    * NULL survives the codegen boundary).
+    */
+  def dot(a: ArrayData, aOff: Int, b: ArrayData, bOff: Int, dims: Int,
       aFloat: Boolean, bFloat: Boolean): java.lang.Double = {
-    val end = offset + dims
-    if (a.numElements() < end || b.numElements() < end) return null
-    var j = offset
-    while (j < end) {
-      if (a.isNullAt(j) || b.isNullAt(j)) return null
+    if (a.numElements() < aOff + dims || b.numElements() < bOff + dims) return null
+    var j = 0
+    while (j < dims) {
+      if (a.isNullAt(aOff + j) || b.isNullAt(bOff + j)) return null
       j += 1
     }
-    var acc = elem(a, offset, aFloat) * elem(b, offset, bFloat)
-    j = offset + 1
-    while (j < end) {
-      acc += elem(a, j, aFloat) * elem(b, j, bFloat)
+    var acc = elem(a, aOff, aFloat) * elem(b, bOff, bFloat)
+    j = 1
+    while (j < dims) {
+      acc += elem(a, aOff + j, aFloat) * elem(b, bOff + j, bFloat)
       j += 1
     }
     java.lang.Double.valueOf(acc)

@@ -3,14 +3,14 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types._
 
 /** Engine extension wiring (`spark.sql.extensions=graft.plans.GraftExtensions`):
   * registers the engine's native expressions with the session's function
   * registry, so they resolve in both the Column API (`call_function`) and
-  * raw SQL.
+  * raw SQL. Every static-call kernel is one [[KernelCall]] row here.
   *
   * [[GraftExtensions.register]] is the imperative twin for sessions the
   * engine does not construct (the driver harness creates its own) —
@@ -39,17 +39,20 @@ object GraftExtensions {
   private final class Args(children: Seq[Expression]) {
     def size: Int = children.length
     def apply(i: Int): Expression = children(i)
+    def take(n: Int): Seq[Expression] = children.take(n)
     def int(i: Int): Int = children(i).eval().asInstanceOf[Number].intValue()
     def long(i: Int): Long = children(i).eval().asInstanceOf[Number].longValue()
     def string(i: Int): String = children(i).eval().toString
     def array(i: Int): ArrayData = children(i).eval().asInstanceOf[ArrayData]
   }
 
+  private val NoDials = (Int.MaxValue, "")
+
   /** An entry whose arity message names the arguments `sig` and whose
     * literal message names the dials `dials._2`, from position `dials._1`.
     */
   private def fn(name: String, cls: Class[_], sig: String, arity: Int,
-      optional: Int = 0, dials: (Int, String) = (Int.MaxValue, ""))(
+      optional: Int = 0, dials: (Int, String) = NoDials)(
       make: Args => Expression): Fn = {
     val (dialsFrom, dialNames) = dials
     Fn(name, new ExpressionInfo(cls.getName, name), arity, optional, dialsFrom,
@@ -62,51 +65,105 @@ object GraftExtensions {
       })
   }
 
+  /** A [[KernelCall]] entry: `owner.method` over one child per param, then
+    * the dial literals `dialArgs` returns (after any range checks).
+    * `nullable`: see [[Kernel]].
+    */
+  private def kernel(name: String, sig: String, arity: Int, optional: Int = 0,
+      dials: (Int, String) = NoDials)(owner: AnyRef, method: String,
+      result: DataType, params: Seq[Param], nullable: Boolean = false)(
+      dialArgs: Args => Seq[Literal] = _ => Nil): Fn = {
+    val k = Kernel(name, owner.getClass, method, result, params, nullable)
+    fn(name, classOf[KernelCall], sig, arity, optional, dials)(a =>
+      KernelCall(k, a.take(params.size), dialArgs(a)))
+  }
+
+  import Param._
+
   val functions: Seq[Fn] = Seq(
-    fn("graft_h64", classOf[H64Expression], "(text)", 1)(a =>
-      H64Expression(a(0))),
-    fn("graft_normalize_key", classOf[NormalizeKeyExpression], "(text)", 1)(a =>
-      NormalizeKeyExpression(a(0))),
-    fn("graft_shingles", classOf[WordShinglesExpression], "(text, n)", 2,
-      dials = 1 -> "n")(a => WordShinglesExpression(a(0), a.int(1))),
-    fn("graft_grams", classOf[WordGramsExpression], "(text, n)", 2,
-      dials = 1 -> "n")(a => WordGramsExpression(a(0), a.int(1))),
-    fn("graft_nfc", classOf[NfcNormalizeExpression], "(text)", 1)(a =>
-      NfcNormalizeExpression(a(0))),
+    kernel("graft_h64", "(text)", 1)(
+      H64Expression, "h64", LongType, Seq(StrictText))(),
+    kernel("graft_normalize_key", "(text)", 1)(
+      NormalizeKeyExpression, "normalize", StringType, Seq(Text))(),
+    kernel("graft_shingles", "(text, n)", 2, dials = 1 -> "n")(
+        WordShinglesExpression, "shingles", ArrayType(StringType, containsNull = false),
+        Seq(Text)) { a =>
+      val n = a.int(1)
+      require(n >= 1, s"graft_shingles width must be >= 1, got $n")
+      Seq(Literal(n))
+    },
+    kernel("graft_grams", "(text, n)", 2, dials = 1 -> "n")(
+        WordGramsExpression, "grams", ArrayType(StringType, containsNull = false),
+        Seq(Text)) { a =>
+      val n = a.int(1)
+      require(n >= 1, s"graft_grams width must be >= 1, got $n")
+      Seq(Literal(n))
+    },
+    kernel("graft_nfc", "(text)", 1)(
+      NfcNormalizeExpression, "nfc", StringType, Seq(Text))(),
     fn("graft_point_in_polygon", classOf[PointInPolygonExpression],
       "(lon, lat, xs, ys)", 4, dials = 2 -> "ring")(a =>
       PointInPolygonExpression(a(0), a(1), a.array(2).toDoubleArray(),
         a.array(3).toDoubleArray())),
-    fn("graft_hyperplane_sig", classOf[HyperplaneSignatureExpression],
-      "(vec, dims, bits)", 3, dials = 1 -> "dims/bits")(a =>
-      HyperplaneSignatureExpression(a(0), a.int(1), a.int(2))),
-    fn("graft_dot", classOf[DotProductExpression], "(a, b, dims[, offset])", 3,
-      optional = 1, dials = 2 -> "dims/offset")(a =>
-      DotProductExpression(a(0), a(1), a.int(2), if (a.size == 4) a.int(3) else 0)),
-    fn("graft_maxsim", classOf[MaxSimExpression], "(q, d, tokens, tokDims)", 4,
-      dials = 2 -> "tokens/tokDims")(a =>
-      MaxSimExpression(a(0), a(1), a.int(2), a.int(3))),
-    fn("graft_any_contains", classOf[AnyContainsExpression], "(arr, needle)", 2,
-      dials = 1 -> "needle")(a => AnyContainsExpression(a(0), a.string(1))),
+    kernel("graft_hyperplane_sig", "(vec, dims, bits)", 3, dials = 1 -> "dims/bits")(
+        HyperplaneSignatureExpression, "signature", LongType, Seq(Vec)) { a =>
+      val bits = a.int(2)
+      require(bits >= 1 && bits <= 62, s"bits must be in [1, 62], got $bits")
+      Seq(Literal(HyperplaneSignatureExpression.Planes(a.int(1), bits),
+        ObjectType(classOf[HyperplaneSignatureExpression.Planes])))
+    },
+    kernel("graft_dot", "(a, b, dims[, offset])", 3, optional = 1,
+        dials = 2 -> "dims/offset")(DotProductExpression, "dotAt", DoubleType,
+        Seq(Vec, Vec), nullable = true) { a =>
+      val (dims, offset) = (a.int(2), if (a.size == 4) a.int(3) else 0)
+      require(dims >= 1, s"dims must be positive, got $dims")
+      require(offset >= 0, s"offset must be non-negative, got $offset")
+      Seq(Literal(dims), Literal(offset))
+    },
+    kernel("graft_maxsim", "(q, d, tokens, tokDims)", 4, dials = 2 -> "tokens/tokDims")(
+        MaxSimExpression, "maxsim", LongType, Seq(Vec, Vec), nullable = true) { a =>
+      val (tokens, tokDims) = (a.int(2), a.int(3))
+      require(tokens >= 1, s"tokens must be positive, got $tokens")
+      require(tokDims >= 1, s"tokDims must be positive, got $tokDims")
+      Seq(Literal(tokens), Literal(tokDims))
+    },
+    kernel("graft_any_contains", "(arr, needle)", 2, dials = 1 -> "needle")(
+        AnyContainsExpression, "anyContains", BooleanType, Seq(Words))(a =>
+      Seq(Literal(a.string(1).toLowerCase))),
     fn("graft_barrier", classOf[BarrierExpression], "(expr)", 1)(a =>
       BarrierExpression(a(0))),
-    fn("graft_scalar_keys", classOf[ScalarKeysExpression], "(map)", 1)(a =>
-      ScalarKeysExpression(a(0))),
-    fn("graft_winnow_stats", classOf[WinnowStatsExpression], "(text, n, w)", 3,
-      dials = 1 -> "n and w")(a =>
-      WinnowStatsExpression(a(0), a.int(1), a.int(2))),
-    fn("graft_cls_score", classOf[ClsScoreExpression], "(text)", 1)(a =>
-      ClsScoreExpression(a(0))),
-    fn("graft_cdc_chunks", classOf[CdcChunksExpression], "(text, mod)", 2,
-      dials = 1 -> "mod")(a => CdcChunksExpression(a(0), a.long(1))),
-    fn("graft_char_entropy", classOf[CharEntropyExpression], "(text, cap)", 2,
-      dials = 1 -> "cap")(a => CharEntropyExpression(a(0), a.int(1))),
-    fn("graft_top_word_count", classOf[TopWordCountExpression], "(text)", 1)(a =>
-      TopWordCountExpression(a(0))),
-    fn("graft_stopword_count", classOf[StopwordCountExpression],
-      "(words, stopwords)", 2, dials = 1 -> "stopwords")(a =>
-      StopwordCountExpression(a(0),
-        a.array(1).toObjectArray(StringType).map(_.toString).toSeq)),
+    kernel("graft_scalar_keys", "(map)", 1)(
+      ScalarKeysExpression, "scalarKeys", StringType, Seq(StringMap))(),
+    kernel("graft_winnow_stats", "(text, n, w)", 3, dials = 1 -> "n and w")(
+        WinnowStatsExpression, "stats", WinnowStatsExpression.Schema, Seq(Text),
+        nullable = true) { a =>
+      val (n, w) = (a.int(1), a.int(2))
+      require(n >= 1 && w >= 1, s"graft_winnow_stats needs n,w >= 1, got n=$n w=$w")
+      Seq(Literal(n), Literal(w))
+    },
+    kernel("graft_cls_score", "(text)", 1)(
+      ClsScoreExpression, "score", LongType, Seq(Text), nullable = true)(),
+    kernel("graft_cdc_chunks", "(text, mod)", 2, dials = 1 -> "mod")(
+        CdcChunksExpression, "chunks", CdcChunksExpression.Schema, Seq(Text)) { a =>
+      val mod = a.long(1)
+      require(mod >= 1, s"graft_cdc_chunks mod must be >= 1, got $mod")
+      Seq(Literal(mod))
+    },
+    kernel("graft_char_entropy", "(text, cap)", 2, dials = 1 -> "cap")(
+        CharEntropyExpression, "entropyQ", LongType, Seq(Text)) { a =>
+      val cap = a.int(1)
+      require(cap >= 1, s"graft_char_entropy cap must be >= 1, got $cap")
+      Seq(Literal(cap))
+    },
+    kernel("graft_top_word_count", "(text)", 1)(
+      TopWordCountExpression, "topCount", LongType, Seq(Text))(),
+    kernel("graft_stopword_count", "(words, stopwords)", 2, dials = 1 -> "stopwords")(
+        StopwordCountExpression, "count", IntegerType, Seq(Words)) { a =>
+      val words = a.array(1).toObjectArray(StringType).map(_.toString).toSeq
+      require(words.nonEmpty, "graft_stopword_count needs a non-empty stopword set")
+      Seq(Literal(StopwordCountExpression.stopSet(words),
+        ObjectType(classOf[java.util.HashSet[_]])))
+    },
     // the aggregates: the analyzer wraps each AggregateFunction into an
     // AggregateExpression itself
     fn("graft_hll", classOf[HyperLogLogAgg], "(col, precision)", 2,
@@ -114,13 +171,23 @@ object GraftExtensions {
     fn("graft_bloom", classOf[BloomFilterAgg], "(fp, bitsLog2, k)", 3,
       dials = 1 -> "bitsLog2 and k")(a =>
       BloomFilterAgg(a(0), a.int(1), a.int(2))),
-    fn("graft_bloom_probe", classOf[BloomProbeExpression], "(bitmap, fp, k)", 3,
-      dials = 2 -> "k")(a => BloomProbeExpression(a(0), a(1), a.int(2))),
+    kernel("graft_bloom_probe", "(bitmap, fp, k)", 3, dials = 2 -> "k")(
+        BloomFilterAgg, "probe", BooleanType, Seq(Bytes, Fingerprint),
+        nullable = true) { a =>
+      val k = a.int(2)
+      require(k >= 1 && k <= 16, s"graft_bloom_probe k must be in [1, 16], got $k")
+      Seq(Literal(k))
+    },
     fn("graft_cms", classOf[CountMinAgg], "(fp, widthLog2, depth)", 3,
       dials = 1 -> "widthLog2 and depth")(a =>
       CountMinAgg(a(0), a.int(1), a.int(2))),
-    fn("graft_cms_query", classOf[CmsQueryExpression], "(sketch, fp, depth)", 3,
-      dials = 2 -> "depth")(a => CmsQueryExpression(a(0), a(1), a.int(2))),
+    kernel("graft_cms_query", "(sketch, fp, depth)", 3, dials = 2 -> "depth")(
+        CountMinAgg, "query", LongType, Seq(Bytes, Fingerprint), nullable = true) { a =>
+      val depth = a.int(2)
+      require(depth >= 1 && depth <= 8,
+        s"graft_cms_query depth must be in [1, 8], got $depth")
+      Seq(Literal(depth))
+    },
     fn("graft_bottomk", classOf[BottomKSketchAgg], "(col, k, salt)", 3,
       dials = 1 -> "k and salt")(a =>
       BottomKSketchAgg(a(0), a.int(1), a.string(2))),

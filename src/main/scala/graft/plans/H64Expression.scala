@@ -1,8 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The portable 60-bit md5-prefix hash as ONE native expression — the
@@ -21,53 +18,57 @@ import org.apache.spark.unsafe.types.UTF8String
   * + adversarial inputs) and interpreted == codegen.
   *
   * Null passes through (`md5(NULL)` is NULL, and every downstream op in
-  * the legacy chain is null-preserving).
+  * the legacy chain is null-preserving). Only STRING input is accepted:
+  * an implicit cast would silently hash a number's text rendering, so a
+  * caller that means that writes the `.cast("string")` itself.
   */
-case class H64Expression(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-
-  override protected def nullSafeEval(input: Any): Any =
-    H64Expression.h64(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.H64Expression.h64($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): H64Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_h64"
-}
-
 object H64Expression {
 
-  /** Per-thread digest + output buffer: MessageDigest.getInstance and the
-    * 16-byte digest array are the dominant allocations of a per-row hash;
-    * both amortize to zero across the task's rows.
+  /** A per-thread MD5 digest + output buffer: MessageDigest.getInstance
+    * and the 16-byte digest array are the dominant allocations of a
+    * per-row hash; both amortize to zero across the task's rows. Every
+    * md5-prefix kernel ([[ClsScoreExpression]], [[WinnowStatsExpression]],
+    * [[CdcChunksExpression]]) hashes its byte slices through it.
     */
-  private final class Ctx {
-    val md: java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-    val buf: Array[Byte] = new Array[Byte](16)
-  }
-  private val local: ThreadLocal[Ctx] =
-    ThreadLocal.withInitial(() => new Ctx)
+  private[plans] final class Digest private[H64Expression] () {
+    private val md = java.security.MessageDigest.getInstance("MD5")
+    private val buf = new Array[Byte](16)
+    private[H64Expression] def reset(): Unit = md.reset()
+    def update(b: Array[Byte]): Unit = md.update(b)
+    def update(b: Array[Byte], off: Int, len: Int): Unit = md.update(b, off, len)
 
-  /** Static kernel the generated code calls: low-60-bit md5 prefix as
-    * BIGINT, bit-identical to `parseLong(hex(0, 15), 16)`.
+    /** Low-60-bit md5 prefix of the bytes updated since the last call
+      * (the digest resets): the first 15 hex digits of the md5 are its
+      * first 60 bits, i.e. the big-endian first-8-bytes long unsigned-
+      * shifted right by 4 — bit-identical to `parseLong(hex(0, 15), 16)`
+      * and `Sketches.h64Scala`, with no hex round trip.
+      */
+    def h64(): Long = {
+      md.digest(buf, 0, 16)
+      val d = buf
+      (((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
+        ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |
+        ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
+        ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)) >>> 4
+    }
+  }
+
+  private val local: ThreadLocal[Digest] =
+    ThreadLocal.withInitial(() => new Digest)
+
+  /** This thread's digest, reset. */
+  private[plans] def digest(): Digest = {
+    val d = local.get()
+    d.reset()
+    d
+  }
+
+  /** The `graft_h64` kernel: low-60-bit md5 prefix of the string's UTF-8
+    * bytes as BIGINT.
     */
   def h64(s: UTF8String): Long = {
-    val c = local.get()
-    c.md.reset()
-    c.md.update(s.getBytes)
-    c.md.digest(c.buf, 0, 16)
-    val d = c.buf
-    (((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
-      ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |
-      ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
-      ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)) >>> 4
+    val d = digest()
+    d.update(s.getBytes)
+    d.h64()
   }
 }

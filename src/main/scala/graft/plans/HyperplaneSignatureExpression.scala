@@ -1,10 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
 /** L7's random-hyperplane signature as a native loop expression.
   *
@@ -13,10 +9,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * dims that is a 1024-term tree whose generated method blows the JVM's
   * 64 KB bytecode limit, so Spark silently falls back to interpreted
   * evaluation (the exact interpreted-lambda trap the engine engineered out
-  * elsewhere). This node generates a single static call over a
-  * reference-object plane matrix: constant-size bytecode for ANY
-  * bits/dims, stays inside WholeStageCodegen, and runs a tight JIT-able
-  * loop.
+  * elsewhere). As a [[KernelCall]] it is a single static call over a
+  * plane-matrix dial: constant-size bytecode for ANY bits/dims, inside
+  * WholeStageCodegen, a tight JIT-able loop.
   *
   * Bit-for-bit parity with the unrolled form (and therefore with the
   * DuckDB oracle twin `hyperplaneSigNSql`): the dot product accumulates
@@ -24,46 +19,22 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * `reduce(_ + _)` term list — and the plane values are the identical
   * Knuth dyadic rationals, precomputed once on the driver.
   */
-case class HyperplaneSignatureExpression(child: Expression, dims: Int, bits: Int)
-    extends UnaryExpression {
-
-  require(bits >= 1 && bits <= 62, s"bits must be in [1, 62], got $bits")
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-
-  private lazy val isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_hyperplane_sig needs ARRAY<FLOAT|DOUBLE>, got $t")
-  }
-
-  /** planes(i)(j) = hyperplane i's component j (Knuth dyadic rational). */
-  lazy val planes: Array[Array[Double]] =
-    Array.tabulate(bits, dims)((i, j) =>
-      graft.functions.Sketches.hyperplane(i, j, dims))
-
-  override protected def nullSafeEval(input: Any): Any =
-    HyperplaneSignatureExpression.signature(
-      input.asInstanceOf[ArrayData], planes, isFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val planesRef = ctx.addReferenceObj("planes", planes, "double[][]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.HyperplaneSignatureExpression.signature($c, $planesRef, $isFloat)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): HyperplaneSignatureExpression =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_hyperplane_sig"
-}
-
 object HyperplaneSignatureExpression {
-  /** Static kernel the generated code calls: bit i of the result is the
+
+  /** The plane matrix of a (dims, bits) signature, keyed by exactly
+    * those two numbers: as a call's dial it compares structurally, where
+    * a raw `Array[Array[Double]]` would compare by reference and defeat
+    * canonicalization and common-subexpression elimination.
+    * rows(i)(j) = hyperplane i's component j (Knuth dyadic rational),
+    * built once per deserialized dial.
+    */
+  final case class Planes(dims: Int, bits: Int) {
+    lazy val rows: Array[Array[Double]] =
+      Array.tabulate(bits, dims)((i, j) =>
+        graft.functions.Sketches.hyperplane(i, j, dims))
+  }
+
+  /** The `graft_hyperplane_sig` kernel: bit i of the result is the
     * sign of the left-associated dot(v, plane_i).
     *
     * Semantics match the SQL twin (`hyperplaneSigNSql`, 1-based `v[j]`
@@ -71,7 +42,8 @@ object HyperplaneSignatureExpression {
     * element makes every dot NULL, so every bit falls to 0 and the
     * signature is 0.
     */
-  def signature(arr: ArrayData, planes: Array[Array[Double]], isFloat: Boolean): Long = {
+  def signature(arr: ArrayData, matrix: Planes, isFloat: Boolean): Long = {
+    val planes = matrix.rows
     val dims = if (planes.length == 0) 0 else planes(0).length
     if (arr.numElements() < dims) return 0L // out-of-bounds -> NULL dots -> 0
     // null elements are rare (clean embedding tables have none) — scan

@@ -1,10 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
 /** Late-interaction (ColBERT maxsim) score as ONE native loop expression:
   * read each embedding as `tokens` sub-vectors of `tokDims` dims and
@@ -16,9 +12,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * (query, doc) pair, and ran two hash aggregates (max over doc tokens,
   * sum over query tokens) — per-pair row fan-out and two shuffles of
   * pair-keyed rows. Here the pair row count stays 1: the token loops run
-  * inside whole-stage codegen via one static call (the
-  * [[DotProductExpression]] pattern — constant bytecode size, tight
-  * JIT-able loop), and the downstream plan sees only (pair, score).
+  * inside whole-stage codegen via one static call (a [[KernelCall]], like
+  * [[DotProductExpression]] — constant bytecode size, tight JIT-able
+  * loop), and the downstream plan sees only (pair, score).
   *
   * Bit-for-bit parity with the composed form (and the DuckDB twin):
   *  - each <q_i, d_j> accumulates LEFT-ASSOCIATED in element order with
@@ -37,57 +33,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * is pinned so the expression can never diverge from the oracle on
   * degenerate input.
   */
-case class MaxSimExpression(left: Expression, right: Expression,
-    tokens: Int, tokDims: Int)
-    extends BinaryExpression {
-
-  require(tokens >= 1, s"tokens must be positive, got $tokens")
-  require(tokDims >= 1, s"tokDims must be positive, got $tokDims")
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  private lazy val leftFloat: Boolean =
-    left.dataType.asInstanceOf[ArrayType].elementType == FloatType
-  private lazy val rightFloat: Boolean =
-    right.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType | DoubleType, _), ArrayType(FloatType | DoubleType, _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"graft_maxsim needs (ARRAY<FLOAT|DOUBLE>, ARRAY<FLOAT|DOUBLE>), got ($l, $r)")
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    MaxSimExpression.maxsim(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], tokens, tokDims,
-      leftFloat, rightFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val boxed = ctx.freshName("maxsimResult")
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      s"""
-         |java.lang.Long $boxed = graft.plans.MaxSimExpression.maxsim(
-         |  $a, $b, $tokens, $tokDims, $leftFloat, $rightFloat);
-         |if ($boxed == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $boxed.longValue();
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): MaxSimExpression =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "graft_maxsim"
-}
-
 object MaxSimExpression {
-  /** Static kernel the generated code calls. Per query token i: the max
+  /** The `graft_maxsim` kernel. Per query token i: the max
     * over doc tokens j of the left-associated widened dot over the two
     * offset windows, quantized floor(·10^6) to a LONG; summed over i.
     * Boxed so NULL survives the codegen boundary.
@@ -104,8 +51,8 @@ object MaxSimExpression {
       var has = false
       var dj = 0
       while (dj < tokens) {
-        val dp = tokenDot(q, qi * tokDims, d, dj * tokDims, tokDims,
-          qFloat, dFloat)
+        val dp = DotProductExpression.dot(q, qi * tokDims, d, dj * tokDims,
+          tokDims, qFloat, dFloat)
         // NULL dots (a NULL element in either window) are skipped, the
         // Spark `max` contract; comparison is plain `>` — finite inputs
         // only, per the embedding-table contract
@@ -119,27 +66,4 @@ object MaxSimExpression {
     }
     if (any) java.lang.Long.valueOf(total) else null
   }
-
-  /** Left-associated widened dot over two independent offset windows —
-    * [[DotProductExpression.dot]] generalized to distinct side offsets
-    * (query token i against doc token j). NULL on any NULL element.
-    */
-  private def tokenDot(a: ArrayData, aOff: Int, b: ArrayData, bOff: Int,
-      dims: Int, aFloat: Boolean, bFloat: Boolean): java.lang.Double = {
-    var j = 0
-    while (j < dims) {
-      if (a.isNullAt(aOff + j) || b.isNullAt(bOff + j)) return null
-      j += 1
-    }
-    var acc = elem(a, aOff, aFloat) * elem(b, bOff, bFloat)
-    j = 1
-    while (j < dims) {
-      acc += elem(a, aOff + j, aFloat) * elem(b, bOff + j, bFloat)
-      j += 1
-    }
-    java.lang.Double.valueOf(acc)
-  }
-
-  @inline private def elem(arr: ArrayData, j: Int, isFloat: Boolean): Double =
-    if (isFloat) arr.getFloat(j).toDouble else arr.getDouble(j)
 }

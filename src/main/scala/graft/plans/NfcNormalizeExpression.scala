@@ -1,8 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unicode NFC normalization as a NATIVE Catalyst expression — the
@@ -13,37 +10,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * NFC is UAX#15: a spec-defined, idempotent canonical form, so the JVM's
   * `java.text.Normalizer` and other engines' implementations (DuckDB
   * `nfc_normalize`) agree exactly — which is what makes the stage
-  * oracle-checkable (q90). Native expression rather than a UDF for the
-  * same reason as [[NormalizeKeyExpression]]: `doGenCode` keeps the
-  * per-document pass inside WholeStageCodegen with no encoder boundary.
+  * oracle-checkable (q90). A [[KernelCall]] rather than a UDF for the
+  * same reason as [[NormalizeKeyExpression]]: the per-document pass
+  * stays inside WholeStageCodegen with no encoder boundary.
   */
-case class NfcNormalizeExpression(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-  // declared input type → a non-string argument gets the standard implicit
-  // cast (or a readable analysis error), never a runtime ClassCastException
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-
-  override protected def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(
-      NfcNormalizeExpression.nfc(input.asInstanceOf[UTF8String].toString))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"UTF8String.fromString(graft.plans.NfcNormalizeExpression.nfc($c.toString()))")
-
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalizeExpression =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_nfc"
-}
-
 object NfcNormalizeExpression {
-  /** Static helper the generated code calls. */
   def nfc(s: String): String =
     java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFC)
+
+  /** The `graft_nfc` kernel. */
+  def nfc(s: UTF8String): UTF8String = UTF8String.fromString(nfc(s.toString))
 
   /** Column-API entry point — resolves through the function registry
     * ([[GraftExtensions]] must be installed on the session).

@@ -1,8 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** C10 as a NATIVE Catalyst expression: NFD-decompose, strip combining
@@ -10,38 +7,16 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * This replaces the Scala-UDF form on the hot path: a UDF forces a
   * catalyst↔JVM encoder boundary per row and blocks expression-level
-  * optimizations; this expression implements `doGenCode`, so it stays
-  * inside WholeStageCodegen as a static call — no closure, no
-  * serialization, null-safe for free via UnaryExpression.
+  * optimizations; `graft_normalize_key` is a [[KernelCall]] instead.
   */
-case class NormalizeKeyExpression(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-  // declared input type → a non-string argument gets the standard implicit
-  // cast (or a readable analysis error), never a runtime ClassCastException
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-
-  override protected def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(
-      NormalizeKeyExpression.normalize(input.asInstanceOf[UTF8String].toString))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"UTF8String.fromString(graft.plans.NormalizeKeyExpression.normalize($c.toString()))")
-
-  override protected def withNewChildInternal(newChild: Expression): NormalizeKeyExpression =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_normalize_key"
-}
-
 object NormalizeKeyExpression {
-  /** Static helper the generated code calls. */
   def normalize(s: String): String =
     java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFD)
       .replaceAll("\\p{M}", "").toLowerCase.trim
+
+  /** The `graft_normalize_key` kernel. */
+  def normalize(s: UTF8String): UTF8String =
+    UTF8String.fromString(normalize(s.toString))
 
   /** Column-API entry point — resolves through the function registry
     * ([[GraftExtensions]] must be installed on the session).

@@ -1,10 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.MapData
-import org.apache.spark.sql.types.{DataType, MapType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** P4's scalar-property cleaning kernel as a native loop expression: the
@@ -24,35 +20,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * sort in binary UTF8 order (`array_sort` on default-collation strings),
   * and the join skips nothing because map keys are never null.
   */
-case class ScalarKeysExpression(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case MapType(StringType, StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_scalar_keys needs MAP<STRING, STRING>, got $t")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    ScalarKeysExpression.scalarKeys(input.asInstanceOf[MapData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.ScalarKeysExpression.scalarKeys($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): ScalarKeysExpression =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_scalar_keys"
-}
-
 object ScalarKeysExpression {
   private val OpenBrace = UTF8String.fromString("{")
   private val Comma = UTF8String.fromString(",")
 
-  /** Static kernel the generated code calls. */
+  /** The `graft_scalar_keys` kernel. */
   def scalarKeys(m: MapData): UTF8String = {
     val n = m.numElements()
     val keys = m.keyArray()

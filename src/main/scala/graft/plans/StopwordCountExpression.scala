@@ -1,10 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Case-insensitive stopword occurrence count as a native loop expression.
@@ -22,53 +18,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * counted when it is in the stopword set; null elements count as false
   * exactly like a null lambda predicate under `filter`.
   */
-/* `stopwords` is a Seq, NOT an Array: case-class equality over an Array
- * parameter is reference equality, which makes structurally identical
- * expressions compare unequal — defeating Catalyst canonicalization and
- * common-subexpression elimination (langIdColumn builds five of these
- * per projection). Seq equality is structural. */
-case class StopwordCountExpression(child: Expression, stopwords: Seq[String])
-    extends UnaryExpression {
+object StopwordCountExpression {
 
-  require(stopwords.nonEmpty, "graft_stopword_count needs a non-empty stopword set")
-
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_stopword_count needs ARRAY<STRING>, got $t")
-  }
-
-  /** Lowercased membership set, built once on the driver and shipped as a
-    * codegen reference object (HashSet of UTF8String — both are
-    * serializable, and lookups run on the raw scan bytes without a
-    * per-element String conversion).
+  /** The lowercased membership set, built once on the driver and passed
+    * as the call's object dial: lookups run on the raw scan bytes with
+    * no per-element String conversion. A `HashSet` compares by content,
+    * so two calls with the same stopwords are equal — an Array would
+    * compare by reference and defeat canonicalization and
+    * common-subexpression elimination (langIdColumn builds five of these
+    * per projection).
     */
-  lazy val stopSet: java.util.HashSet[UTF8String] = {
+  def stopSet(stopwords: Seq[String]): java.util.HashSet[UTF8String] = {
     val s = new java.util.HashSet[UTF8String](stopwords.size * 2)
     stopwords.foreach(w => s.add(UTF8String.fromString(w.toLowerCase)))
     s
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    StopwordCountExpression.count(input.asInstanceOf[ArrayData], stopSet)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val setRef = ctx.addReferenceObj("stopSet", stopSet, "java.util.HashSet")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.StopwordCountExpression.count($c, $setRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): StopwordCountExpression =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_stopword_count"
-}
-
-object StopwordCountExpression {
-  /** Static kernel the generated code calls. */
+  /** The `graft_stopword_count` kernel. */
   def count(arr: ArrayData, stops: java.util.HashSet[UTF8String]): Int = {
     var c = 0
     var i = 0

@@ -1,9 +1,5 @@
 package graft.plans
 
-
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Maximum word multiplicity (the count of the most frequent exact word)
@@ -23,29 +19,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * yields the single empty word and top count 1, exactly what the
   * exploded form counted. Words compare as exact strings.
   */
-case class TopWordCountExpression(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-
-  override protected def nullSafeEval(input: Any): Any =
-    TopWordCountExpression.topCount(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.TopWordCountExpression.topCount($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): TopWordCountExpression =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_top_word_count"
-}
-
 object TopWordCountExpression {
 
-  /** Static kernel the generated code calls. Byte-level since r19
+  /** The `graft_top_word_count` kernel. Byte-level since r19
     * ([[WordBytes]]): word keys are zero-copy UTF8String slices
     * (byte-wise equals/hashCode), no decode, no regex.
     */

@@ -1,8 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The L52 winnowing per-document stats as ONE native loop expression —
@@ -25,32 +24,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * Returns null when the document has no trigrams (m == 0) — exactly the
   * rows the legacy inner aggregates dropped — so callers filter nulls.
   */
-case class WinnowStatsExpression(child: Expression, n: Int, w: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  require(n >= 1 && w >= 1, s"graft_winnow_stats needs n,w >= 1, got n=$n w=$w")
-
-  override def dataType: DataType = WinnowStatsExpression.Schema
-  override def nullable: Boolean = true
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-
-  override protected def nullSafeEval(input: Any): Any =
-    WinnowStatsExpression.stats(input.asInstanceOf[UTF8String], n, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val f = "graft.plans.WinnowStatsExpression.stats"
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = $f($c, $n, $w);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowStatsExpression =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_winnow_stats"
-}
-
 object WinnowStatsExpression {
 
   val Schema: StructType = StructType(Seq(
@@ -58,33 +31,24 @@ object WinnowStatsExpression {
     StructField("n_windows", LongType, nullable = false),
     StructField("n_selected", LongType, nullable = false)))
 
-  private def h64(md: java.security.MessageDigest): Long = {
-    val d = md.digest()
-    (((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
-      ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |
-      ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
-      ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)) >>> 4
-  }
-
   private val Space = Array[Byte](0x20)
 
-  /** Static kernel the generated code calls; null when no n-grams. */
+  /** The `graft_winnow_stats` kernel; null when no n-grams. */
   def stats(s: UTF8String, n: Int, w: Int): GenericInternalRow = {
     val wd = WordBytes.split(s)
     val m = wd.count - (n - 1)
     if (m <= 0) return null
-    val md = java.security.MessageDigest.getInstance("MD5")
+    val md = H64Expression.digest()
     val packs = new Array[Long](m)
     var p = 0
     while (p < m) {
-      md.reset()
       var j = 0
       while (j < n) {
         if (j > 0) md.update(Space)
         md.update(wd.bytes, wd.offs(p + j), wd.lens(p + j))
         j += 1
       }
-      packs(p) = (h64(md) % 1099511627776L) * 1048576L + p
+      packs(p) = (md.h64() % 1099511627776L) * 1048576L + p
       p += 1
     }
     val nWindows = math.max(m - w + 1, 0)

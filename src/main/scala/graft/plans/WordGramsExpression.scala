@@ -1,10 +1,6 @@
 package graft.plans
 
-
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** NON-distinct word n-grams in document order, as a native loop
@@ -12,7 +8,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * consumers (the L95 BM25 index), where [[WordShinglesExpression]]'s
   * distinctness would destroy tf.
   *
-  * Same codegen rationale as the shingle node: the Column form
+  * Same codegen rationale as the shingle kernel: the Column form
   * (`sequence` + `transform(element_at …)`) is a higher-order lambda —
   * CodegenFallback — and one in a projection de-optimizes the whole
   * host Project to interpreted. Same parsing contract too: SPACE-only
@@ -21,30 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * `list_transform(range(1, len(w) - n + 2), i -> …)` over the same
   * split, duplicates preserved.
   */
-case class WordGramsExpression(child: Expression, n: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  require(n >= 1, s"graft_grams width must be >= 1, got $n")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-
-  override protected def nullSafeEval(input: Any): Any =
-    WordGramsExpression.grams(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.WordGramsExpression.grams($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordGramsExpression =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_grams"
-}
-
 object WordGramsExpression {
-  /** Static kernel the generated code calls — order-preserving, with
+  /** The `graft_grams` kernel — order-preserving, with
     * duplicates (tf survives). Byte-level since r19 ([[WordBytes]]):
     * same trim/split/join contract, no String round trips.
     */

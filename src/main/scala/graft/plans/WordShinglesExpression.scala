@@ -1,10 +1,6 @@
 package graft.plans
 
-
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Distinct word n-gram shingles as a native loop expression — the
@@ -27,31 +23,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * control chars <= U+0020, so a tab/newline-edged document would lose
   * the empty edge words the reference form keeps.
   */
-case class WordShinglesExpression(child: Expression, n: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  require(n >= 1, s"graft_shingles width must be >= 1, got $n")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-
-  override protected def nullSafeEval(input: Any): Any =
-    WordShinglesExpression.shingles(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.WordShinglesExpression.shingles($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordShinglesExpression =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_shingles"
-}
-
 object WordShinglesExpression {
 
-  /** Static kernel the generated code calls. Byte-level since r19
+  /** The `graft_shingles` kernel. Byte-level since r19
     * ([[WordBytes]]): no UTF-8 decode, no regex, no per-shingle String
     * round trip — same trim/split/join/distinct contract, spec-pinned.
     */

@@ -10,6 +10,11 @@ trait SparkSpec extends AnyFunSuite {
   // on its core count
   lazy val spark: SparkSession = graft.tools.Harness.session(cpus = 4)
 
+  /** A native function's plan node, as its registry entry builds it. */
+  def graftCall(name: String, args: org.apache.spark.sql.catalyst.expressions.Expression*)
+      : org.apache.spark.sql.catalyst.expressions.Expression =
+    graft.plans.GraftExtensions.functions.find(_.name == name).get.builder(args)
+
   /** Flatten an executed plan THROUGH adaptive stage boundaries — AQE wraps
     * materialized stages in leaf QueryStageExec nodes, so a plain collect
     * stops at stage edges (the PlanAudit walk, shared by plan-shape specs).

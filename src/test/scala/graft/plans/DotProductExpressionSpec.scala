@@ -61,7 +61,8 @@ class DotProductExpressionSpec extends SparkSpec {
     def lit(v: Array[Double]) = org.apache.spark.sql.catalyst.expressions.Literal(
       org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(v),
       org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))
-    val expr = DotProductExpression(lit(a), lit(b), 8)
+    val expr = graftCall("graft_dot", lit(a), lit(b),
+      org.apache.spark.sql.catalyst.expressions.Literal(8))
     assert(expr.eval(null) === refDot(a.toIndexedSeq, b.toIndexedSeq, 8))
   }
 

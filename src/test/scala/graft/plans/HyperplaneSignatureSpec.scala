@@ -85,10 +85,11 @@ class HyperplaneSignatureSpec extends SparkSpec {
   test("interpreted eval matches the codegen path") {
     val v = (0 until dims).map(j => math.sin(j * 13) * 2).toArray
     val arr = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(v)
-    val expr = HyperplaneSignatureExpression(
+    val expr = graftCall("graft_hyperplane_sig",
       org.apache.spark.sql.catalyst.expressions.Literal(arr,
         org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType)),
-      dims, 16)
+      org.apache.spark.sql.catalyst.expressions.Literal(dims),
+      org.apache.spark.sql.catalyst.expressions.Literal(16))
     assert(expr.eval(null) === refSig(v.toIndexedSeq, dims, 16))
   }
 }

@@ -88,7 +88,9 @@ class MaxSimExpressionSpec extends SparkSpec {
     def alit(v: Array[Float]) = org.apache.spark.sql.catalyst.expressions.Literal(
       org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(v),
       org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))
-    val e = MaxSimExpression(alit(q), alit(d), Tokens, TokDims)
+    val e = graftCall("graft_maxsim", alit(q), alit(d),
+      org.apache.spark.sql.catalyst.expressions.Literal(Tokens),
+      org.apache.spark.sql.catalyst.expressions.Literal(TokDims))
     assert(e.eval(null) === refMaxsim(q.toIndexedSeq, d.toIndexedSeq))
   }
 }

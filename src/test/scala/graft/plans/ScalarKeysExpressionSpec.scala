@@ -45,7 +45,7 @@ class ScalarKeysExpressionSpec extends SparkSpec {
         org.apache.spark.unsafe.types.UTF8String.fromString(k) ->
           org.apache.spark.unsafe.types.UTF8String.fromString(v)
       })
-    val expr = ScalarKeysExpression(
+    val expr = graftCall("graft_scalar_keys",
       org.apache.spark.sql.catalyst.expressions.Literal(arr,
         org.apache.spark.sql.types.MapType(
           org.apache.spark.sql.types.StringType,

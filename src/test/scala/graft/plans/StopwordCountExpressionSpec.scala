@@ -41,15 +41,17 @@ class StopwordCountExpressionSpec extends SparkSpec {
   }
 
   test("structurally identical instances are equal — canonicalization/CSE must see them") {
-    // the stopword set rides as a Seq, not an Array: Array's case-class
+    // the stopword set rides as a HashSet dial, not an Array: Array
     // equality is by reference, which made five structurally identical
     // langIdColumn counts compare unequal and defeated common-
     // subexpression elimination (round-8 ADVICE)
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
     import org.apache.spark.sql.types.{ArrayType, StringType}
     val child = BoundReference(0, ArrayType(StringType), nullable = true)
-    val a = StopwordCountExpression(child, Seq("the", "of").toArray[String])
-    val b = StopwordCountExpression(child, List("the", "of"))
+    val a = graftCall("graft_stopword_count", child,
+      Literal(Seq("the", "of").toArray[String]))
+    val b = graftCall("graft_stopword_count", child,
+      Literal(List("the", "of").toArray))
     assert(a === b, "same child + same stopwords must be equal")
     assert(a.semanticEquals(b), "canonicalized forms must match")
     assert(a.hashCode === b.hashCode)
@@ -60,10 +62,10 @@ class StopwordCountExpressionSpec extends SparkSpec {
     // direct interpreted eval
     val arr = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
       Array("The", "of", "zebra").map(org.apache.spark.unsafe.types.UTF8String.fromString))
-    val expr = StopwordCountExpression(
+    val expr = graftCall("graft_stopword_count",
       org.apache.spark.sql.catalyst.expressions.Literal(arr,
         org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType)),
-      Array("the", "of"))
+      org.apache.spark.sql.catalyst.expressions.Literal(Array("the", "of")))
     assert(expr.eval(null) === 2)
 
     // plan shape: the quality projection must sit inside WholeStageCodegen

@@ -50,7 +50,7 @@ class TopWordCountExpressionSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.unsafe.types.UTF8String
     Seq("a b a", "", "  ", "x x x y y z").foreach { t =>
-      val e = graft.plans.TopWordCountExpression(Literal(UTF8String.fromString(t),
+      val e = graftCall("graft_top_word_count", Literal(UTF8String.fromString(t),
         org.apache.spark.sql.types.StringType))
       assert(e.eval(null) == graft.plans.TopWordCountExpression.topCount(
         UTF8String.fromString(t)))
