@@ -196,10 +196,11 @@ object GraftExtensions {
       GramMatrixAgg(a(0), a.int(1), a.long(2))))
 
   /** Imperative registration for externally-created sessions: functions go
-    * to the registry, the optimizer rule to `experimental.extraOptimizations`
-    * (both idempotent).
+    * to the registry, the optimizer rule to `experimental.extraOptimizations`,
+    * the `file:` scheme to [[graft.core.LocalStorage]] (all idempotent).
     */
   def register(spark: SparkSession): Unit = {
+    graft.core.LocalStorage.install(spark)
     functions.foreach { f =>
       spark.sessionState.functionRegistry
         .registerFunction(FunctionIdentifier(f.name), f.info, f.builder)

@@ -150,7 +150,7 @@ object MixtureAuditOps {
             col("rank_i") <= col("depth"))
           .groupBy(col("depth"), col("q_id"))
           .agg(count(lit(1)).as("ov"))
-        broadcast(depths).join(
+        depths.join(
             ov.groupBy(col("depth"))
               .agg(sum(col("ov")).as("sum_overlap"),
                 sum(when(col("ov") === col("depth"), 1L).otherwise(0L))

@@ -9,21 +9,29 @@ import org.apache.spark.sql.functions._
   * within-shard key order makes sampling reproducible and resumable by
   * (shard, offset)).
   *
-  * Spark-first shape: ONE `repartition(n, shard)` hash exchange followed
-  * by `sortWithinPartitions` — the sort is per-shard (bounded by
-  * corpus/n, the q74 argument), there is no global sort, and
-  * `maxRecordsPerFile` splits oversized shards into numbered part files
-  * without another pass. The shard id is the salted md5-prefix hash of
-  * the key (`partitionBy("shard")` directory layout), so shard
-  * membership is a pure function of the key — re-running the writer on
-  * a re-deduped corpus moves no row between shards.
+  * Spark-first shape: ONE hash exchange on the shard id followed by
+  * `sortWithinPartitions` — the sort is per-shard (bounded by corpus/n,
+  * the q74 argument), there is no global sort, and `maxRecordsPerFile`
+  * splits oversized shards into numbered part files without another
+  * pass. The shard id is the salted md5-prefix hash of the key
+  * (`partitionBy("shard")` directory layout), so shard membership is a
+  * pure function of the key — re-running the writer on a re-deduped
+  * corpus moves no row between shards.
+  *
+  * The exchange is `repartition(shard)`, not `repartition(n, shard)`:
+  * `n` fixes membership, not the task count. Hash partitioning keeps
+  * every shard inside one task, and AQE sizes the tasks by data,
+  * coalescing small partitions (with `n` as the task count, a 125-row
+  * corpus in 64 shards takes 64 write tasks, each deserializing the
+  * job's Hadoop conf).
   *
   * At 100 TB: n scales with the corpus, the exchange is the single
-  * shuffle, and each task writes its own shard directory — no driver
-  * funnel, no post-pass. ShardWriterSpec verifies the layout contract:
-  * every shard directory holds only its keys, rows are key-sorted within
-  * every part file, file sizes respect the record cap, and a re-write
-  * reproduces identical shard membership.
+  * shuffle, and each task writes the shard directories of its
+  * partition — no driver funnel, no post-pass. ShardWriterSpec verifies
+  * the layout contract: every shard directory holds only its keys, rows
+  * are key-sorted within every part file, file sizes respect the record
+  * cap, a shard under the cap is one file, and a re-write reproduces
+  * identical shard membership.
   */
 object ShardWriter {
 
@@ -61,7 +69,7 @@ object ShardWriter {
   private def writeMode(df: DataFrame, key: String, nShards: Int,
       outDir: String, maxRecordsPerFile: Long, mode: String): Unit = {
     df.withColumn("shard", shardId(col(key), nShards))
-      .repartition(nShards, col("shard"))
+      .repartition(col("shard"))
       .sortWithinPartitions(col("shard"), col(key))
       .write
       .partitionBy("shard")

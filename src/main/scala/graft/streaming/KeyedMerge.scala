@@ -100,6 +100,7 @@ object KeyedMerge {
   def latestState(events: Dataset[Ev], ttlMicros: Option[Long],
       watermarkDelay: String): Dataset[StateOut] = {
     import events.sparkSession.implicits._
+    graft.core.LocalStorage.install(events.sparkSession)
     val timeout =
       if (ttlMicros.isDefined) GroupStateTimeout.EventTimeTimeout
       else GroupStateTimeout.NoTimeout

@@ -94,6 +94,7 @@ object StreamingDedup {
   def dedupStream(docs: Dataset[Doc], ttlMicros: Option[Long],
       watermarkDelay: String): Dataset[Decision] = {
     import docs.sparkSession.implicits._
+    graft.core.LocalStorage.install(docs.sparkSession)
     val timeout =
       if (ttlMicros.isDefined) GroupStateTimeout.EventTimeTimeout
       else GroupStateTimeout.NoTimeout

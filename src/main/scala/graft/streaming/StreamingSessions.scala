@@ -82,6 +82,7 @@ object StreamingSessions {
   def sessionize(events: Dataset[Ev], gapUs: Long,
       watermarkDelay: String): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
+    graft.core.LocalStorage.install(events.sparkSession)
     events
       .withColumn("ts", timestamp_micros(col("tsu")))
       .withWatermark("ts", watermarkDelay)

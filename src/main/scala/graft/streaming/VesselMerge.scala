@@ -93,6 +93,7 @@ object VesselMerge {
   def vesselTable(obs: Dataset[VesselObs], ttlMicros: Option[Long],
       watermarkDelay: String): Dataset[VesselState] = {
     import obs.sparkSession.implicits._
+    graft.core.LocalStorage.install(obs.sparkSession)
     val timeout =
       if (ttlMicros.isDefined) GroupStateTimeout.EventTimeTimeout
       else GroupStateTimeout.NoTimeout
