@@ -1,14 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{BinaryType, DataType}
 
-/** Bloom-filter membership sketch as a native `TypedImperativeAggregate`
-  * plus its probe kernel — the bounded-memory form of the corpus
+/** Bloom-filter membership sketch as a native [[SketchAgg]] plus its
+  * probe kernel — the bounded-memory form of the corpus
   * membership test behind incremental exact dedup (SURVEY §2.11a L31/L64).
   *
   * At 100 TB the exact "is this fingerprint already in the corpus" check
@@ -34,13 +29,7 @@ import org.apache.spark.sql.types._
   * Determinism: set-bit union is order- and merge-tree-independent;
   * `BloomSpec` asserts byte equality across 1- and 8-partition builds.
   */
-case class BloomFilterAgg(
-    child: Expression,
-    bitsLog2: Int,
-    k: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]] with UnaryLike[Expression] {
+case class BloomFilterAgg(bitsLog2: Int, k: Int) extends Sketch[Array[Byte]] {
 
   // cap 31: the universal family reduces positions mod P31 = 2^31 - 1, so
   // bits past 2^31 are unreachable — a wider filter would waste >half its
@@ -54,23 +43,11 @@ case class BloomFilterAgg(
   private val nBytes: Int = 1 << (bitsLog2 - 3)
 
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType | IntegerType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_bloom hashes a BIGINT fingerprint, got $t")
-  }
+  override def init(): Array[Byte] = new Array[Byte](nBytes)
 
-  override def createAggregationBuffer(): Array[Byte] = new Array[Byte](nBytes)
-
-  override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v != null) {
-      BloomFilterAgg.add(buf, v.asInstanceOf[Number].longValue(), k)
-    }
-    buf
-  }
+  override def update(buf: Array[Byte], v: Any): Array[Byte] =
+    BloomFilterAgg.add(buf, v.asInstanceOf[Number].longValue(), k)
 
   override def merge(buf: Array[Byte], other: Array[Byte]): Array[Byte] = {
     var i = 0
@@ -85,15 +62,6 @@ case class BloomFilterAgg(
 
   override def serialize(buf: Array[Byte]): Array[Byte] = buf
   override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): BloomFilterAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BloomFilterAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): BloomFilterAgg =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_bloom"
 }
 
 object BloomFilterAgg {
@@ -117,7 +85,7 @@ object BloomFilterAgg {
   def positionSql(i: Int, h: String, m: Int): String =
     s"(${graft.functions.Sketches.familyHashSql(i, h)} % $m)"
 
-  def add(buf: Array[Byte], h: Long, k: Int): Unit = {
+  def add(buf: Array[Byte], h: Long, k: Int): Array[Byte] = {
     // Long m: an Int `len << 3` wraps at len = 2^28 bytes (2^31 bits) —
     // the agg's require caps width below that, but the kernel must not
     // rely on it (probe sees arbitrary caller bitmaps)
@@ -128,6 +96,7 @@ object BloomFilterAgg {
       buf(p >>> 3) = (buf(p >>> 3) | (1 << (p & 7))).toByte
       i += 1
     }
+    buf
   }
 
   /** The `graft_bloom_probe(bitmap, fingerprint, k)` kernel: true iff

@@ -2,15 +2,12 @@ package graft.plans
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
+import scala.collection.mutable.ArrayBuffer
 
-/** Bottom-k hash sample as a native `TypedImperativeAggregate` — the
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+
+/** Bottom-k hash sample as a native [[SketchAgg]] — the
   * engine's second sketch (after [[HyperLogLogAgg]]), giving single-pass
   * approximate QUANTILES over unbounded integer domains.
   *
@@ -40,31 +37,15 @@ import org.apache.spark.sql.types._
   * per kept pair. Error: nearest-rank quantiles off a k-sample have
   * standard error ≈ sqrt(p(1-p)/k) in rank space.
   */
-case class BottomKSketchAgg(
-    child: Expression,
-    k: Int,
-    salt: String,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[scala.collection.mutable.ArrayBuffer[(Long, Long)]]
-  with UnaryLike[Expression] {
+case class BottomKSketchAgg(k: Int, salt: String) extends Sketch[ArrayBuffer[(Long, Long)]] {
 
   require(k >= 1 && k <= 65536, s"graft_bottomk k must be in [1, 65536], got $k")
 
-  type Buf = scala.collection.mutable.ArrayBuffer[(Long, Long)]
+  type Buf = ArrayBuffer[(Long, Long)]
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType | IntegerType | ShortType | ByteType =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_bottomk supports integral inputs, got $t")
-  }
-
-  override def createAggregationBuffer(): Buf =
-    new scala.collection.mutable.ArrayBuffer[(Long, Long)]()
+  override def init(): Buf = new Buf()
 
   private def compact(buf: Buf): Buf = {
     if (buf.length > k) {
@@ -75,14 +56,11 @@ case class BottomKSketchAgg(
     buf
   }
 
-  override def update(buf: Buf, input: InternalRow): Buf = {
-    val v = child.eval(input)
-    if (v != null) {
-      val value = v.asInstanceOf[Number].longValue()
-      buf += ((BottomKSketchAgg.hash(salt, value), value))
-      if (buf.length >= BottomKSketchAgg.TransientPairsFactor * k)
-        compact(buf)
-    }
+  override def update(buf: Buf, v: Any): Buf = {
+    val value = v.asInstanceOf[Number].longValue()
+    buf += ((BottomKSketchAgg.hash(salt, value), value))
+    if (buf.length >= BottomKSketchAgg.TransientPairsFactor * k)
+      compact(buf)
     buf
   }
 
@@ -97,8 +75,10 @@ case class BottomKSketchAgg(
     new GenericArrayData(sample)
   }
 
+  // sorted by (hash, value) even under k pairs, so a state's bytes do
+  // not depend on the order its rows arrived or merged in
   override def serialize(buf: Buf): Array[Byte] = {
-    val kept = compact(buf)
+    val kept = compact(buf).sortInPlace()(Ordering.Tuple2[Long, Long])
     val bb = ByteBuffer.allocate(kept.length * BottomKSketchAgg.BytesPerPair)
     kept.foreach { case (h, v) => bb.putLong(h); bb.putLong(v) }
     bb.array()
@@ -106,24 +86,11 @@ case class BottomKSketchAgg(
 
   override def deserialize(bytes: Array[Byte]): Buf = {
     val bb = ByteBuffer.wrap(bytes)
-    val buf = createAggregationBuffer()
+    val buf = init()
     while (bb.remaining() >= BottomKSketchAgg.BytesPerPair)
       buf += ((bb.getLong, bb.getLong))
     buf
   }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): BottomKSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BottomKSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): BottomKSketchAgg =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_bottomk"
-
-  // ArrayBuffer is mutable — Spark requires the buffer object itself as
-  // the aggregation state, which TypedImperativeAggregate handles; no
-  // extra contract beyond update/merge returning the (mutated) buffer.
 }
 
 object BottomKSketchAgg {
@@ -149,9 +116,8 @@ object BottomKSketchAgg {
     * AS BIGINT)`, so an oracle reproduces the sample exactly.
     */
   def hash(salt: String, v: Long): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(s"bk:$salt:$v".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.substring(0, 15), 16)
+    val d = H64Expression.digest()
+    d.update(s"bk:$salt:$v".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    d.h64()
   }
 }

@@ -1,14 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{BinaryType, DataType}
 
-/** Count-min frequency sketch as a native `TypedImperativeAggregate` plus
-  * its point-query kernel — the frequency analog of the L64 Bloom
+/** Count-min frequency sketch as a native [[SketchAgg]] plus its
+  * point-query kernel — the frequency analog of the L64 Bloom
   * membership filter (one-sided error in the other direction: an estimate
   * can only OVERcount, never undercount).
   *
@@ -29,13 +24,8 @@ import org.apache.spark.sql.types._
   * from a per-(row, cell) counting join. Determinism: integer sums, no
   * order sensitivity; `CmsSpec` asserts byte equality across partitionings.
   */
-case class CountMinAgg(
-    child: Expression,
-    widthLog2: Int,
-    depth: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] with UnaryLike[Expression] {
+case class CountMinAgg(widthLog2: Int, depth: Int) extends LongCellSketch(
+    "graft_cms", depth << widthLog2, CountMinAgg.header(depth, widthLog2)) {
 
   require(widthLog2 >= 1 && widthLog2 <= 24,
     s"graft_cms widthLog2 must be in [1, 24], got $widthLog2")
@@ -45,80 +35,23 @@ case class CountMinAgg(
   private val width: Int = 1 << widthLog2
 
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType | IntegerType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_cms counts a BIGINT fingerprint, got $t")
-  }
-
-  override def createAggregationBuffer(): Array[Long] =
-    new Array[Long](depth * width)
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val h = v.asInstanceOf[Number].longValue()
-      var i = 0
-      while (i < depth) {
-        buf(i * width + BloomFilterAgg.position(i, h, width)) += 1L
-        i += 1
-      }
-    }
-    buf
-  }
-
-  override def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
+  override def update(buf: Array[Long], v: Any): Array[Long] = {
+    val h = v.asInstanceOf[Number].longValue()
     var i = 0
-    while (i < buf.length) {
-      buf(i) += other(i)
+    while (i < depth) {
+      buf(i * width + BloomFilterAgg.position(i, h, width)) += 1L
       i += 1
     }
     buf
   }
 
+  // 8-byte header = magic | depth | widthLog2, so query() can VALIDATE
+  // the geometry instead of trusting its depth argument: a depth-4
+  // sketch queried at depth 2 used to pass the old divisibility check,
+  // derive a doubled width, and silently UNDERcount — breaking the
+  // one-sided contract (ADVICE r12)
   override def eval(buf: Array[Long]): Any = serialize(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    // 8-byte header = magic | depth | widthLog2, so query() can VALIDATE
-    // the geometry instead of trusting its depth argument: a depth-4
-    // sketch queried at depth 2 used to pass the old divisibility check,
-    // derive a doubled width, and silently UNDERcount — breaking the
-    // one-sided contract (ADVICE r12)
-    val bb = java.nio.ByteBuffer.allocate((buf.length + 1) * 8)
-    bb.putLong(CountMinAgg.header(depth, widthLog2))
-    var i = 0
-    while (i < buf.length) {
-      bb.putLong(buf(i))
-      i += 1
-    }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val hdr = bb.getLong()
-    require(hdr == CountMinAgg.header(depth, widthLog2),
-      s"graft_cms buffer header mismatch: expected depth=$depth " +
-        s"widthLog2=$widthLog2, got 0x${hdr.toHexString}")
-    val out = new Array[Long](bytes.length / 8 - 1)
-    var i = 0
-    while (i < out.length) {
-      out(i) = bb.getLong()
-      i += 1
-    }
-    out
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CountMinAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CountMinAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): CountMinAgg =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_cms"
 }
 
 object CountMinAgg {

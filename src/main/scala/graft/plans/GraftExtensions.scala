@@ -10,7 +10,8 @@ import org.apache.spark.sql.types._
 /** Engine extension wiring (`spark.sql.extensions=graft.plans.GraftExtensions`):
   * registers the engine's native expressions with the session's function
   * registry, so they resolve in both the Column API (`call_function`) and
-  * raw SQL. Every static-call kernel is one [[KernelCall]] row here.
+  * raw SQL. Every static-call kernel is one [[KernelCall]] row here, and
+  * every sketch aggregate one [[SketchAgg]] row.
   *
   * [[GraftExtensions.register]] is the imperative twin for sessions the
   * engine does not construct (the driver harness creates its own) —
@@ -77,6 +78,13 @@ object GraftExtensions {
     fn(name, classOf[KernelCall], sig, arity, optional, dials)(a =>
       KernelCall(k, a.take(params.size), dialArgs(a)))
   }
+
+  /** A [[SketchAgg]] entry over its first argument, of type `param`, and
+    * the sketch `make` builds from the dials (after its range checks). */
+  private def sketch(name: String, sig: String, arity: Int, dials: String,
+      param: Param)(make: Args => Sketch[_]): Fn =
+    fn(name, classOf[SketchAgg[_]], sig, arity, dials = 1 -> dials)(a =>
+      SketchAgg(name, make(a), param, a(0)))
 
   import Param._
 
@@ -164,13 +172,12 @@ object GraftExtensions {
       Seq(Literal(StopwordCountExpression.stopSet(words),
         ObjectType(classOf[java.util.HashSet[_]])))
     },
-    // the aggregates: the analyzer wraps each AggregateFunction into an
+    // the aggregates: the analyzer wraps each SketchAgg into an
     // AggregateExpression itself
-    fn("graft_hll", classOf[HyperLogLogAgg], "(col, precision)", 2,
-      dials = 1 -> "precision")(a => HyperLogLogAgg(a(0), a.int(1))),
-    fn("graft_bloom", classOf[BloomFilterAgg], "(fp, bitsLog2, k)", 3,
-      dials = 1 -> "bitsLog2 and k")(a =>
-      BloomFilterAgg(a(0), a.int(1), a.int(2))),
+    sketch("graft_hll", "(col, precision)", 2, "precision", IntegralOrText)(a =>
+      HyperLogLogAgg(a.int(1))),
+    sketch("graft_bloom", "(fp, bitsLog2, k)", 3, "bitsLog2 and k", Fingerprint)(a =>
+      BloomFilterAgg(a.int(1), a.int(2))),
     kernel("graft_bloom_probe", "(bitmap, fp, k)", 3, dials = 2 -> "k")(
         BloomFilterAgg, "probe", BooleanType, Seq(Bytes, Fingerprint),
         nullable = true) { a =>
@@ -178,9 +185,8 @@ object GraftExtensions {
       require(k >= 1 && k <= 16, s"graft_bloom_probe k must be in [1, 16], got $k")
       Seq(Literal(k))
     },
-    fn("graft_cms", classOf[CountMinAgg], "(fp, widthLog2, depth)", 3,
-      dials = 1 -> "widthLog2 and depth")(a =>
-      CountMinAgg(a(0), a.int(1), a.int(2))),
+    sketch("graft_cms", "(fp, widthLog2, depth)", 3, "widthLog2 and depth", Fingerprint)(a =>
+      CountMinAgg(a.int(1), a.int(2))),
     kernel("graft_cms_query", "(sketch, fp, depth)", 3, dials = 2 -> "depth")(
         CountMinAgg, "query", LongType, Seq(Bytes, Fingerprint), nullable = true) { a =>
       val depth = a.int(2)
@@ -188,12 +194,10 @@ object GraftExtensions {
         s"graft_cms_query depth must be in [1, 8], got $depth")
       Seq(Literal(depth))
     },
-    fn("graft_bottomk", classOf[BottomKSketchAgg], "(col, k, salt)", 3,
-      dials = 1 -> "k and salt")(a =>
-      BottomKSketchAgg(a(0), a.int(1), a.string(2))),
-    fn("graft_gram", classOf[GramMatrixAgg], "(vec, dims, quantum)", 3,
-      dials = 1 -> "dims and quantum")(a =>
-      GramMatrixAgg(a(0), a.int(1), a.long(2))))
+    sketch("graft_bottomk", "(col, k, salt)", 3, "k and salt", Integral)(a =>
+      BottomKSketchAgg(a.int(1), a.string(2))),
+    sketch("graft_gram", "(vec, dims, quantum)", 3, "dims and quantum", Vec)(a =>
+      GramMatrixAgg(a.int(1), a.long(2))))
 
   /** Imperative registration for externally-created sessions: functions go
     * to the registry, the optimizer rule to `experimental.extraOptimizations`,

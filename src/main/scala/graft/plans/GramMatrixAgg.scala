@@ -1,14 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 
-/** Exact integer Gram matrix as a native `TypedImperativeAggregate`:
+/** Exact integer Gram matrix as a native [[SketchAgg]]:
   * per input vector, quantize each component on the q105 ladder
   * (floor(v·quantum) — bit-identical to Spark's own
   * `floor(cast(x AS double) * quantum)` since float→double widening is
@@ -34,101 +29,42 @@ import org.apache.spark.sql.types._
   * is an ARRAY<BIGINT> in row-major order, consumed by posexplode
   * immediately).
   */
-case class GramMatrixAgg(
-    child: Expression,
-    dims: Int,
-    quantum: Long,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] with UnaryLike[Expression] {
+case class GramMatrixAgg(dims: Int, quantum: Long, isFloat: Boolean = false)
+  extends LongCellSketch("graft_gram", dims * dims) {
 
   require(dims >= 1 && dims <= 512, s"graft_gram dims must be in [1, 512], got $dims")
   require(quantum >= 1L, s"graft_gram quantum must be positive, got $quantum")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_gram expects ARRAY<FLOAT|DOUBLE>, got $t")
-  }
+  // FLOAT elements for an ARRAY<FLOAT> input, DOUBLE otherwise
+  override def forInput(t: DataType): GramMatrixAgg =
+    copy(isFloat = t match { case ArrayType(FloatType, _) => true; case _ => false })
 
-  private val isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def createAggregationBuffer(): Array[Long] =
-    new Array[Long](dims * dims)
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      require(arr.numElements() == dims,
-        s"graft_gram expects $dims components, got ${arr.numElements()}")
-      val q = new Array[Long](dims)
-      var i = 0
-      while (i < dims) {
-        val x = if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
-        q(i) = math.floor(x * quantum).toLong
-        i += 1
-      }
-      i = 0
-      while (i < dims) {
-        val qi = q(i)
-        val row = i * dims
-        var j = 0
-        while (j < dims) {
-          buf(row + j) += qi * q(j)
-          j += 1
-        }
-        i += 1
-      }
-    }
-    buf
-  }
-
-  override def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
+  override def update(buf: Array[Long], v: Any): Array[Long] = {
+    val arr = v.asInstanceOf[ArrayData]
+    require(arr.numElements() == dims,
+      s"graft_gram expects $dims components, got ${arr.numElements()}")
+    val q = new Array[Long](dims)
     var i = 0
-    while (i < buf.length) {
-      buf(i) += other(i)
+    while (i < dims) {
+      val x = if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
+      q(i) = math.floor(x * quantum).toLong
+      i += 1
+    }
+    i = 0
+    while (i < dims) {
+      val qi = q(i)
+      val row = i * dims
+      var j = 0
+      while (j < dims) {
+        buf(row + j) += qi * q(j)
+        j += 1
+      }
       i += 1
     }
     buf
   }
 
   override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(buf.length * 8)
-    var i = 0
-    while (i < buf.length) {
-      bb.putLong(buf(i))
-      i += 1
-    }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    require(bytes.length == dims * dims * 8,
-      s"graft_gram buffer length mismatch: expected ${dims * dims * 8}, " +
-        s"got ${bytes.length}")
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val out = new Array[Long](dims * dims)
-    var i = 0
-    while (i < out.length) {
-      out(i) = bb.getLong()
-      i += 1
-    }
-    out
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): GramMatrixAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): GramMatrixAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): GramMatrixAgg =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_gram"
 }

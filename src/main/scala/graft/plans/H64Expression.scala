@@ -28,7 +28,7 @@ object H64Expression {
     * and the 16-byte digest array are the dominant allocations of a
     * per-row hash; both amortize to zero across the task's rows. Every
     * md5-prefix kernel ([[ClsScoreExpression]], [[WinnowStatsExpression]],
-    * [[CdcChunksExpression]]) hashes its byte slices through it.
+    * [[CdcChunksExpression]], [[BottomKSketchAgg.hash]]) hashes through it.
     */
   private[plans] final class Digest private[H64Expression] () {
     private val md = java.security.MessageDigest.getInstance("MD5")

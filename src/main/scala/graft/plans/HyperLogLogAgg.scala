@@ -1,15 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** HyperLogLog approximate distinct count as a native
-  * `TypedImperativeAggregate` — the sketch aggregate SURVEY §2.11 reserved
+  * [[SketchAgg]] — the sketch aggregate SURVEY §2.11 reserved
   * for the moment sketches entered the engine. At 100 TB an exact
   * `countDistinct` is an expand + full shuffle of every distinct value;
   * this is a fixed 2^p-byte register array per group with map-side partial
@@ -26,12 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Relative standard error ≈ 1.04/sqrt(2^p); the default p=11 (2 KB per
   * group) gives ~2.3%.
   */
-case class HyperLogLogAgg(
-    child: Expression,
-    precision: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]] with UnaryLike[Expression] {
+case class HyperLogLogAgg(precision: Int) extends Sketch[Array[Byte]] {
 
   require(precision >= 4 && precision <= 16,
     s"graft_hll precision must be in [4, 16], got $precision")
@@ -39,28 +29,17 @@ case class HyperLogLogAgg(
   private val m: Int = 1 << precision
 
   override def dataType: DataType = LongType
-  override def nullable: Boolean = false
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType | IntegerType | ShortType | ByteType | StringType =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_hll supports integral and string inputs, got $t")
-  }
+  override def init(): Array[Byte] = new Array[Byte](m)
 
-  override def createAggregationBuffer(): Array[Byte] = new Array[Byte](m)
-
-  override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val h = HyperLogLogAgg.hash64(v)
-      val idx = (h >>> (64 - precision)).toInt
-      val rest = h << precision
-      val rank =
-        if (rest == 0L) 64 - precision + 1
-        else java.lang.Long.numberOfLeadingZeros(rest) + 1
-      if (rank > buf(idx)) buf(idx) = rank.toByte
-    }
+  override def update(buf: Array[Byte], v: Any): Array[Byte] = {
+    val h = HyperLogLogAgg.hash64(v)
+    val idx = (h >>> (64 - precision)).toInt
+    val rest = h << precision
+    val rank =
+      if (rest == 0L) 64 - precision + 1
+      else java.lang.Long.numberOfLeadingZeros(rest) + 1
+    if (rank > buf(idx)) buf(idx) = rank.toByte
     buf
   }
 
@@ -100,15 +79,6 @@ case class HyperLogLogAgg(
 
   override def serialize(buf: Array[Byte]): Array[Byte] = buf
   override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HyperLogLogAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HyperLogLogAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): HyperLogLogAgg =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_hll"
 }
 
 object HyperLogLogAgg {
@@ -123,7 +93,7 @@ object HyperLogLogAgg {
     case i: java.lang.Integer => mix(i.longValue())
     case sh: java.lang.Short => mix(sh.longValue())
     case b: java.lang.Byte => mix(b.longValue())
-    case other => mix(other.hashCode().toLong) // unreachable given type check
+    case other => mix(other.hashCode().toLong) // unreachable given the param
   }
 
   private def fnv64(bytes: Array[Byte]): Long = {

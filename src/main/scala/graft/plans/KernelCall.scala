@@ -14,7 +14,8 @@ import org.apache.spark.sql.types._
   * of another type first gets the analyzer's implicit cast to
   * `types.head`. With `floatFlag`, the kernel also receives, after the
   * dials, whether the resolved child is ARRAY<FLOAT> (it reads elements
-  * with `getFloat` then, `getDouble` otherwise).
+  * with `getFloat` then, `getDouble` otherwise; a [[SketchAgg]]'s sketch
+  * gets the resolved child type through [[Sketch.forInput]] instead).
   */
 final case class Param(sql: String, types: Seq[DataType], cast: Boolean = false,
     floatFlag: Boolean = false) {
@@ -33,6 +34,10 @@ object Param {
     Seq(ArrayType(FloatType), ArrayType(DoubleType)), floatFlag = true)
   val Bytes: Param = Param("BINARY", Seq(BinaryType))
   val Fingerprint: Param = Param("BIGINT", Seq(LongType, IntegerType))
+  val Integral: Param =
+    Param("BIGINT|INT|SMALLINT|TINYINT", Seq(LongType, IntegerType, ShortType, ByteType))
+  val IntegralOrText: Param =
+    Param("BIGINT|INT|SMALLINT|TINYINT|STRING", Integral.types :+ StringType)
 
   private def loose(t: DataType): DataType = t match {
     case ArrayType(e, _) => ArrayType(loose(e), containsNull = true)
@@ -78,7 +83,7 @@ final case class Kernel(name: String, owner: Class[_], method: String,
   * Not kernels, so not this node: `graft_point_in_polygon`
   * ([[PipBboxPruneRule]] matches that node and reads its ring),
   * `graft_barrier` (its codegen is its child's, and it is declared
-  * non-deterministic) and the five aggregates (buffers, not calls).
+  * non-deterministic) and the five aggregates (one [[SketchAgg]] each).
   */
 final case class KernelCall(kernel: Kernel, children: Seq[Expression],
     dials: Seq[Literal]) extends Expression with ImplicitCastInputTypes {

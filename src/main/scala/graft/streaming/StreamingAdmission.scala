@@ -71,20 +71,7 @@ object StreamingAdmission {
     val delta = mb.toDF()
       .agg(call_function("graft_bloom", col("fp"), lit(bitsLog2), lit(k)))
       .head().getAs[Array[Byte]](0)
-    (verdicts, union(bitmap, delta))
-  }
-
-  /** Bitmap union — the same OR merge `graft_bloom`'s partial aggregate
-    * uses, applied to the driver-held artifact.
-    */
-  def union(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    require(a.length == b.length, "bitmap width mismatch")
-    val out = new Array[Byte](a.length)
-    var i = 0
-    while (i < a.length) {
-      out(i) = (a(i) | b(i)).toByte
-      i += 1
-    }
-    out
+    // graft_bloom's own OR merge, applied to the driver-held artifact
+    (verdicts, graft.plans.BloomFilterAgg(bitsLog2, k).merge(bitmap.clone(), delta))
   }
 }

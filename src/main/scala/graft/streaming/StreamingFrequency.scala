@@ -27,51 +27,19 @@ import org.apache.spark.sql.functions._
 object StreamingFrequency {
 
   import graft.queries.TextCorpusOps.{CmsDepth, CmsWidthLog2}
-  import graft.plans.{BloomFilterAgg, CountMinAgg}
+  import graft.plans.CountMinAgg
 
   case class Arrival(doc_id: Long, w: String)
 
-  private val Width = 1 << CmsWidthLog2
+  /** The algebra `graft_cms` runs, at the stream's geometry. */
+  private val Cms = CountMinAgg(CmsWidthLog2, CmsDepth)
 
   /** Zero matrix with the versioned geometry header — the add identity. */
-  def emptySketch: Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate((CmsDepth * Width + 1) * 8)
-    bb.putLong(CountMinAgg.header(CmsDepth, CmsWidthLog2))
-    bb.array()
-  }
+  def emptySketch: Array[Byte] = Cms.serialize(Cms.init())
 
-  /** Element-wise counter add; both operands must carry the same
-    * geometry header (the versioned-format check, ADVICE r12/r13).
-    */
-  def add(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    require(a.length == b.length, "sketch length mismatch")
-    val ba = java.nio.ByteBuffer.wrap(a)
-    val bb = java.nio.ByteBuffer.wrap(b)
-    val ha = ba.getLong(); val hb = bb.getLong()
-    require(ha == hb,
-      f"sketch header mismatch: 0x$ha%x vs 0x$hb%x")
-    val out = java.nio.ByteBuffer.allocate(a.length)
-    out.putLong(ha)
-    while (ba.hasRemaining) out.putLong(ba.getLong() + bb.getLong())
-    out.array()
-  }
-
-  /** Point estimate: min over depth rows at the term's cells — the same
-    * position arithmetic as the codegen'd `graft_cms_query`.
-    */
-  def estimate(sk: Array[Byte], h: Long): Long = {
-    val bb = java.nio.ByteBuffer.wrap(sk)
-    bb.getLong() // header, validated at add time
-    var best = Long.MaxValue
-    var i = 0
-    while (i < CmsDepth) {
-      val c = bb.getLong(
-        8 * (1 + i * Width + BloomFilterAgg.position(i, h, Width)))
-      if (c < best) best = c
-      i += 1
-    }
-    best
-  }
+  /** Point estimate: min over depth rows at the term's cells — the
+    * codegen'd `graft_cms_query` kernel itself, header checks included. */
+  def estimate(sk: Array[Byte], h: Long): Long = CountMinAgg.query(sk, h, CmsDepth)
 
   /** Fold one micro-batch into `sk` (unmodified; a new array returns). */
   def observeBatch(mb: Dataset[Arrival], sk: Array[Byte]): Array[Byte] = {
@@ -80,7 +48,9 @@ object StreamingFrequency {
         graft.functions.Sketches.h64(col("w")),
         lit(CmsWidthLog2), lit(CmsDepth)).as("sk"))
       .collect()(0).getAs[Array[Byte]](0)
-    add(sk, batchSk)
+    // counter add, graft_cms's own merge: both operands must carry this
+    // geometry's header and length (the versioned-format check, ADVICE r12/r13)
+    Cms.serialize(Cms.merge(Cms.deserialize(sk), Cms.deserialize(batchSk)))
   }
 
   /** Drain a memory-stream query, reporting after each batch the running

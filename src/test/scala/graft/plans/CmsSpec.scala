@@ -39,8 +39,7 @@ class CmsSpec extends SparkSpec {
         buf(i * width + BloomFilterAgg.position(i, h, width)) += 1L
       }
     }
-    CountMinAgg(org.apache.spark.sql.catalyst.expressions.Literal(1L),
-      widthLog2, Depth).serialize(buf)
+    CountMinAgg(widthLog2, Depth).serialize(buf)
   }
 
   test("point estimates equal the per-(row, cell) counting model") {
@@ -86,8 +85,7 @@ class CmsSpec extends SparkSpec {
         buf(i * width + BloomFilterAgg.position(i, h, width)) += 1L
       }
     }
-    val sk = CountMinAgg(org.apache.spark.sql.catalyst.expressions.Literal(1L),
-      4, Depth).serialize(buf)
+    val sk = CountMinAgg(4, Depth).serialize(buf)
     occ.foreach(h => assert(CountMinAgg.query(sk, h, Depth) >= 1L,
       s"undercount for negative fingerprint $h"))
     // a sketch built at depth 2 queried at depth 3 must throw, not read

@@ -11,15 +11,22 @@ import graft.SparkSpec
 import graft.tools.PlanAudit
 
 /** The [[KernelCall]] contract, checked for every registry entry that
-  * builds one: over ScalaCheck-generated inputs (NUL, lone surrogates,
-  * astral code points, empty, about 64 KiB, null), interpreted evaluation
-  * equals generated code, and two calls in one projection compile and
-  * sit inside one whole-stage codegen span.
+  * builds one, and for the two hand-written scalars
+  * (`graft_point_in_polygon`, `graft_barrier`): over ScalaCheck-generated
+  * inputs (NUL, lone surrogates, astral code points, empty, about 64 KiB,
+  * null), interpreted evaluation equals generated code, and two calls in
+  * one projection compile and sit inside one whole-stage codegen span.
   */
 class KernelCallSpec extends SparkSpec {
 
   private val kernels: Seq[String] = GraftExtensions.functions
     .filter(_.info.getClassName == classOf[KernelCall].getName).map(_.name)
+
+  /** Every scalar entry (all but the sketch aggregates) and its node class. */
+  private val scalars: Seq[(String, String)] = GraftExtensions.functions
+    .filter(_.info.getClassName != classOf[SketchAgg[_]].getName)
+    .map(f => f.name -> f.info.getClassName)
+  private val nodeClass = scalars.toMap
 
   // --- generated inputs -------------------------------------------------
 
@@ -88,6 +95,8 @@ class KernelCallSpec extends SparkSpec {
 
   private def s(i: Int) = col(s"s$i")
   private def w(i: Int) = col(s"w$i")
+  // a coordinate in [-1, 1] from a generated fingerprint
+  private def coord(i: Int) = col(s"fp$i") / 100.0 - 1.0
 
   private val calls: Map[String, Int => Seq[Column]] = Map(
     "graft_h64" -> (i => Seq(s(i))),
@@ -112,7 +121,11 @@ class KernelCallSpec extends SparkSpec {
     "graft_hyperplane_sig" -> (i =>
       Seq(col(if (i == 1) "f1" else "d2"), lit(8), lit(8 * i))),
     "graft_bloom_probe" -> (i => Seq(bloom, col(s"fp$i"), lit(3))),
-    "graft_cms_query" -> (i => Seq(cms, col(s"fp$i"), lit(2))))
+    "graft_cms_query" -> (i => Seq(cms, col(s"fp$i"), lit(2))),
+    // the two scalars that are not KernelCalls
+    "graft_point_in_polygon" -> (i => Seq(coord(i), coord(3 - i),
+      lit(Array(-0.5, 0.9, 0.1 * i)), lit(Array(-0.8, 0.0, 0.7)))),
+    "graft_barrier" -> (i => Seq(if (i == 1) s(1) else col("fp2"))))
 
   private def withConf[T](kv: (String, String)*)(body: => T): T = {
     val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
@@ -150,16 +163,21 @@ class KernelCallSpec extends SparkSpec {
       val spanned = plan.collect { case ws: WholeStageCodegenExec => ws }
         .flatMap(_.collect { case p: ProjectExec => p })
       assert(spanned.exists(_.projectList.flatMap(_.collect {
-        case k: KernelCall => k }).size == 2), plan.toString)
+        case k if k.getClass.getName == nodeClass(name) => k }).size == 2), plan.toString)
     }
   }
 
   test("every KernelCall entry has a call shape here") {
     assert(kernels.size == 18)
-    assert(calls.keySet == kernels.toSet)
+    assert(kernels.toSet.subsetOf(calls.keySet))
   }
 
-  kernels.foreach { name =>
+  test("every scalar entry has a call shape here") {
+    assert(scalars.size == 20)
+    assert(calls.keySet == nodeClass.keySet)
+  }
+
+  scalars.map(_._1).foreach { name =>
     test(s"$name: interpreted == codegen; two calls compile inside one span") {
       checkTwoCalls(name, frame)
     }
