@@ -234,23 +234,6 @@ object FilterDsl {
       .reduceOption(_ || _)
       .getOrElse(lit(true))
 
-  /** Resolver for dot-paths into real (struct) columns. */
-  def structResolver(root: String => Column): String => Column =
-    path => path.split('.').toSeq match {
-      case head +: tail => tail.foldLeft(root(head))(_.getField(_))
-      case _ => root(path)
-    }
-
-  /** Resolver for dot-paths into a JSON-string column (dynamic metadata —
-    * data model §1.1.3): `a.b.c` → `get_json_object(json, '$.a.b.c')`.
-    *
-    * Parse-per-reference: every compiled predicate that touches the column
-    * re-parses the document. Prefer [[mapResolver]] over a once-parsed
-    * `from_json(json, map<string,string>)` column for hot paths.
-    */
-  def jsonResolver(json: Column): String => Column =
-    path => get_json_object(json, "$." + path)
-
   /** Parse-ONCE resolver (data-model hazard 10): dot-paths against a
     * pre-parsed `map<string,string>` column (`from_json(json,
     * MapType(StringType, StringType))`, materialized behind an encoder

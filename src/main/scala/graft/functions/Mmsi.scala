@@ -77,8 +77,6 @@ object Mmsi {
     }
   }
 
-  def isValid(mmsi: Long): Boolean = classify(mmsi) != Invalid
-
   /** MID as a Column (when-ladder over the string form; null = unparseable). */
   def midColumn(mmsi: Column): Column = {
     val s = mmsi.cast("string")

@@ -141,10 +141,6 @@ object Sketches {
     if ((g + 1) * (g + 1) <= x) g + 1 else if (g * g > x) g - 1 else g
   }
 
-  /** Seed-parameterized hash family: h_i(s) = h64(i || ':' || s). */
-  def seeded(seed: Int, c: Column): Column = h64(concat(lit(s"$seed:"), c))
-  def seededSql(seed: Int, e: String): String = h64Sql(s"'$seed:' || $e")
-
   // --- universal hash family over an already-md5-hashed value ---
   //
   // md5 is the expensive part (and higher-order-function lambdas are

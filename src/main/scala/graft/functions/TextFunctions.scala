@@ -6,8 +6,9 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text-analysis functions: key normalization (C10), plus the LLM-pipeline
-  * text operators (language ID, quality scoring, token counting, document
-  * fingerprinting) built on codegen'd built-ins wherever possible.
+  * text operators (stopword profiles, quality scoring, token counting, PII
+  * scrubbing, document fingerprinting) built on codegen'd built-ins
+  * wherever possible.
   */
 object TextFunctions {
 
@@ -53,11 +54,13 @@ object TextFunctions {
     coalesce(call_function("graft_shingles", text, lit(n)),
       array().cast("array<string>"))
 
-  // --- Language ID (n-gram/stopword heuristic) ---
+  // --- Stopword profiles ---
 
-  /** Tiny public stopword profiles. Scoring: fraction of words that are
-    * stopwords of each language; argmax with deterministic (alphabetical)
-    * tie-break, 'und' (undetermined) when nothing scores.
+  /** Tiny public stopword profiles: the English set feeds the quality
+    * score's stopword ratio (and its SQL twin); q40's language ID scores
+    * each language by the fraction of words that are its stopwords, argmax
+    * with deterministic (score, lang) tie-break, 'und' (undetermined) when
+    * nothing scores.
     */
   val StopwordProfiles: Seq[(String, Set[String])] = Seq(
     "de" -> Set("der", "die", "das", "und", "ist", "nicht", "mit", "ein", "von", "zu"),
@@ -65,38 +68,6 @@ object TextFunctions {
     "es" -> Set("el", "la", "de", "que", "y", "los", "un", "es", "en", "por"),
     "fr" -> Set("le", "la", "de", "et", "un", "est", "pour", "que", "dans", "les"),
     "zh" -> Set("的", "是", "了", "在", "我", "有", "和", "不", "人", "这"))
-
-  def langIdHeuristic(text: String): String = {
-    val words = text.toLowerCase.split("\\s+").filter(_.nonEmpty)
-    if (words.isEmpty) "und"
-    else {
-      val scores = StopwordProfiles.map { case (lang, sw) =>
-        lang -> words.count(sw.contains).toDouble / words.length
-      }
-      val best = scores.maxBy { case (lang, sc) => (sc, lang) } // ties → last alphabetically; deterministic
-      if (best._2 == 0.0) "und" else best._1
-    }
-  }
-
-  /** Column form: per-language stopword-hit fraction, argmax by
-    * (score, lang) with 'und' floor. The five per-language counts run as
-    * native `graft_stopword_count` loops (see [[qualityScoreColumn]] —
-    * the lambda form was CodegenFallback and de-optimized the host
-    * projection), so the whole language-ID pass stays in whole-stage
-    * codegen.
-    */
-  def langIdColumn(text: Column): Column = {
-    val words = split(lower(trim(text)), "\\s+")
-    val n = size(words)
-    val scored = StopwordProfiles.map { case (lang, sw) =>
-      val hits = call_function("graft_stopword_count", words,
-        lit(sw.toSeq.sorted.toArray))
-      struct((hits.cast("double") / n).as("score"), lit(lang).as("lang"))
-    }
-    val best = greatest(scored: _*)
-    when(n === 0 || best.getField("score") === 0.0, lit("und"))
-      .otherwise(best.getField("lang"))
-  }
 
   // --- Quality scoring ---
 
@@ -214,8 +185,6 @@ object TextFunctions {
     }
     h
   }
-
-  val fingerprint64Udf = udf(fingerprint64 _)
 
   /** Portable content fingerprint via md5 prefix → BIGINT; identical
     * construction exists in DuckDB (`CAST('0x'||substr(md5(x),1,15) AS BIGINT)`),

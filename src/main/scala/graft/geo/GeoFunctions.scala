@@ -10,11 +10,15 @@ import org.apache.spark.sql.functions._
   * with a buffered point-near-polygon variant
   * (`tools/generate-tlc-localities.js:26-37`).
   *
-  * Spark-first design: the polygon set is small and known at plan time
-  * (broadcast lookup data), so [[pointInPolygonColumn]] UNROLLS the ray-cast
-  * edge loop into a Catalyst Column tree of built-in comparisons — fully
-  * codegen'd, no UDF, no serialization. For truly dynamic polygon columns a
-  * UDF fallback is provided ([[pointInPolygonUdf]]).
+  * One point-in-polygon path: the polygon set is small and known at plan
+  * time (broadcast lookup data), so [[pointInPolygonColumn]] UNROLLS the
+  * ray-cast edge loop into a Catalyst Column tree of built-in comparisons
+  * — fully codegen'd, no UDF, no serialization, and no node, registry row
+  * or optimizer rule of the engine's own. The tree grows about 5 terms
+  * per vertex, so a ring beyond about 140 vertices would cross the ~700-
+  * term 64 KB generated-method limit and run interpreted; such a ring
+  * would need one `KernelCall` row over a static loop instead. The rings
+  * of q18 and q61 have 5 vertices each.
   *
   * First-match-wins region assignment (SURVEY §7.3.6) is an ordered
   * `when().otherwise()` chain over the polygon list — see [[firstMatchRegion]].
@@ -39,15 +43,20 @@ object GeoFunctions {
 
   /** Ray-cast unrolled into a Column tree for a plan-time-known ring:
     * `inside = XOR over edges of (straddles-latitude AND crossing-left-of-x)`.
-    * Stays inside WholeStageCodegen.
+    * Stays inside WholeStageCodegen. A horizontal edge (`yi == yj`) never
+    * straddles a latitude, so it never flips the even-odd state and
+    * [[pointInPolygon]]'s test skips it; the tree leaves it out rather
+    * than carry a constant-false term over a division by zero.
     */
   def pointInPolygonColumn(lon: Column, lat: Column, ring: Seq[(Double, Double)]): Column = {
-    val edges = ring.indices.map { i =>
+    val edges = ring.indices.flatMap { i =>
       val j = if (i == 0) ring.length - 1 else i - 1
       val (xi, yi) = ring(i); val (xj, yj) = ring(j)
-      (lit(yi) > lat) =!= (lit(yj) > lat) &&
-        lon < (lit(xj - xi) * (lat - lit(yi)) / lit(yj - yi) + lit(xi))
+      if (yi == yj) None
+      else Some((lit(yi) > lat) =!= (lit(yj) > lat) &&
+        lon < (lit(xj - xi) * (lat - lit(yi)) / lit(yj - yi) + lit(xi)))
     }
+    require(edges.nonEmpty, s"ring needs a non-horizontal edge, got $ring")
     edges.reduce((a, b) => a =!= b) // XOR fold ≡ even-odd rule
   }
 
@@ -68,11 +77,6 @@ object GeoFunctions {
     pointInPolygon(lon, lat, ring) || ring.exists { case (x, y) =>
       math.hypot(x - lon, y - lat) <= buffer
     }
-
-  /** Generic UDF for polygon data not known at plan time. */
-  val pointInPolygonUdf =
-    udf((lon: Double, lat: Double, ring: Seq[Seq[Double]]) =>
-      pointInPolygon(lon, lat, ring.map(p => (p(0), p(1)))))
 
   /** F1 bounding-box predicate with the reference's NZ defaults
     * (`ais-proxy/server.js:672-680`).

@@ -77,11 +77,6 @@ object Jsonais {
     when(size(ok) > 0, fromMsg(element_at(ok, 1)))
   }
 
-  /** `MMSI` (uppercase) lives in its own one-field schema: Spark's field
-    * resolution is case-insensitive, so `mmsi`/`MMSI` cannot share a struct.
-    */
-  val schemaUpper: StructType = StructType(Seq(StructField("MMSI", StringType)))
-
   /** Dispatch over the parsed struct — returns the canonical struct or null.
     * `mmsiUpper` carries the direct-dialect `MMSI` key parsed separately.
     */
@@ -233,8 +228,10 @@ object Jsonais {
             lit("]}")),
           schema)))
       .drop(dropAfterParse: _*) // e.g. the caller's raw column — parsed, not needed past the barrier
-      // uppercase-MMSI dialect key via a cheap regex (the reference just
-      // parseInt()s the field; a numeric extract is the same semantics)
+      // uppercase-MMSI dialect key via a cheap regex, not the parsed
+      // struct: Spark's field resolution is case-insensitive, so
+      // `mmsi`/`MMSI` cannot share one (the reference just parseInt()s
+      // the field; a numeric extract is the same semantics)
       .withColumn("__jsonais_upper",
         when(regexp_extract(col("__jsonais_raw"), "\"MMSI\"\\s*:\\s*\"?(-?[0-9.]+)", 1) =!= "",
           regexp_extract(col("__jsonais_raw"), "\"MMSI\"\\s*:\\s*\"?(-?[0-9.]+)", 1)))

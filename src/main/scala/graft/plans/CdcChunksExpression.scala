@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
@@ -87,14 +86,5 @@ object CdcChunksExpression {
         w.joined(start, n - start))))
     }
     new GenericArrayData(out.toArray.asInstanceOf[Array[Any]])
-  }
-
-  /** Scala-facing twin (specs replay the arithmetic without Catalyst). */
-  def chunksScala(text: String, mod: Long): Seq[(Long, Long, Long, String)] = {
-    val arr = chunks(UTF8String.fromString(text), mod)
-    (0 until arr.numElements()).map { i =>
-      val r = arr.getStruct(i, 4).asInstanceOf[InternalRow]
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getUTF8String(3).toString)
-    }
   }
 }

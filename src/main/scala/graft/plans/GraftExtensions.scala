@@ -11,7 +11,9 @@ import org.apache.spark.sql.types._
   * registers the engine's native expressions with the session's function
   * registry, so they resolve in both the Column API (`call_function`) and
   * raw SQL. Every static-call kernel is one [[KernelCall]] row here, and
-  * every sketch aggregate one [[SketchAgg]] row.
+  * every sketch aggregate one [[SketchAgg]] row. Functions are all it
+  * injects: no optimizer rule, so Catalyst plans every query with its
+  * stock batches.
   *
   * [[GraftExtensions.register]] is the imperative twin for sessions the
   * engine does not construct (the driver harness creates its own) —
@@ -23,7 +25,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.functions.foreach { f =>
       ext.injectFunction((FunctionIdentifier(f.name), f.info, f.builder))
     }
-    ext.injectOptimizerRule(_ => PipBboxPruneRule)
   }
 }
 
@@ -109,10 +110,6 @@ object GraftExtensions {
     },
     kernel("graft_nfc", "(text)", 1)(
       NfcNormalizeExpression, "nfc", StringType, Seq(Text))(),
-    fn("graft_point_in_polygon", classOf[PointInPolygonExpression],
-      "(lon, lat, xs, ys)", 4, dials = 2 -> "ring")(a =>
-      PointInPolygonExpression(a(0), a(1), a.array(2).toDoubleArray(),
-        a.array(3).toDoubleArray())),
     kernel("graft_hyperplane_sig", "(vec, dims, bits)", 3, dials = 1 -> "dims/bits")(
         HyperplaneSignatureExpression, "signature", LongType, Seq(Vec)) { a =>
       val bits = a.int(2)
@@ -200,8 +197,8 @@ object GraftExtensions {
       GramMatrixAgg(a.int(1), a.long(2))))
 
   /** Imperative registration for externally-created sessions: functions go
-    * to the registry, the optimizer rule to `experimental.extraOptimizations`,
-    * the `file:` scheme to [[graft.core.LocalStorage]] (all idempotent).
+    * to the registry and the `file:` scheme to [[graft.core.LocalStorage]]
+    * (both idempotent). No optimizer rule is injected.
     */
   def register(spark: SparkSession): Unit = {
     graft.core.LocalStorage.install(spark)
@@ -209,16 +206,5 @@ object GraftExtensions {
       spark.sessionState.functionRegistry
         .registerFunction(FunctionIdentifier(f.name), f.info, f.builder)
     }
-    if (!spark.experimental.extraOptimizations.contains(PipBboxPruneRule)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PipBboxPruneRule
-    }
   }
-
-  /** Column-API entry for the native PIP predicate. */
-  def pointInPolygon(lon: org.apache.spark.sql.Column, lat: org.apache.spark.sql.Column,
-      ring: Seq[(Double, Double)]): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.call_function("graft_point_in_polygon", lon, lat,
-      org.apache.spark.sql.functions.lit(ring.map(_._1).toArray),
-      org.apache.spark.sql.functions.lit(ring.map(_._2).toArray))
 }

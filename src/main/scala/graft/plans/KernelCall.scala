@@ -80,10 +80,10 @@ final case class Kernel(name: String, owner: Class[_], method: String,
   * two identical calls look different to common-subexpression
   * elimination. `foldable` and `deterministic` follow the children.
   *
-  * Not kernels, so not this node: `graft_point_in_polygon`
-  * ([[PipBboxPruneRule]] matches that node and reads its ring),
-  * `graft_barrier` (its codegen is its child's, and it is declared
-  * non-deterministic) and the five aggregates (one [[SketchAgg]] each).
+  * Not kernels, so not this node: `graft_barrier` (its codegen is its
+  * child's, and it is declared non-deterministic) and the five aggregates
+  * (one [[SketchAgg]] each). Point-in-polygon is no registry row at all:
+  * it is a Column tree of built-in comparisons (`geo.GeoFunctions`).
   */
 final case class KernelCall(kernel: Kernel, children: Seq[Expression],
     dials: Seq[Literal]) extends Expression with ImplicitCastInputTypes {

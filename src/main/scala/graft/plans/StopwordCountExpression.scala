@@ -25,8 +25,8 @@ object StopwordCountExpression {
     * no per-element String conversion. A `HashSet` compares by content,
     * so two calls with the same stopwords are equal — an Array would
     * compare by reference and defeat canonicalization and
-    * common-subexpression elimination (langIdColumn builds five of these
-    * per projection).
+    * common-subexpression elimination (a per-language scorer builds one
+    * of these per language in the same projection).
     */
   def stopSet(stopwords: Seq[String]): java.util.HashSet[UTF8String] = {
     val s = new java.util.HashSet[UTF8String](stopwords.size * 2)

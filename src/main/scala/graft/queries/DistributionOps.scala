@@ -40,9 +40,6 @@ object DistributionOps {
   private[queries] val NegClip = 1048576L
   private[queries] val NegTopK = 16
 
-  /** L143 temperature grid — τ = 1 (raw), 2 (√), 4 (∜). */
-  private[queries] val Temperatures = Seq(1L, 2L, 4L)
-
   def all: Seq[GraftQuery] = {
 
     /* L140: duplication-provenance attribution — the DIRECTED read on

@@ -1320,7 +1320,7 @@ object LlmPipeline {
     val q40 = GraftQuery(
       "q40_lang_id", "L8",
       (s, d) => {
-        // relational formulation of TextFunctions.langIdColumn: explode
+        // relational formulation of the stopword-fraction argmax: explode
         // words, broadcast-join the stopword table, count hits per (doc,
         // lang), argmax by (score, lang) via a struct max — all codegen'd
         // (the array-lambda form pays interpreted HOF evaluation per word

@@ -118,8 +118,4 @@ object Tiles {
     }
     Tile(t.z, t.x, t.y, w, h, out)
   }
-
-  /** R5: transparent fallback tile (`weather-proxy/server.js:596-607`). */
-  def transparentTile(z: Int, x: Int, y: Int, size: Int = TileSize): Tile =
-    Tile(z, x, y, size, size, new Array[Byte](size * size * 4))
 }

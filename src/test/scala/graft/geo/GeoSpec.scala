@@ -65,22 +65,48 @@ class GeoSpec extends SparkSpec {
     assert(!GeoFunctions.pointInPolygon(15, 5, square))
     assert(!GeoFunctions.pointInPolygon(-1, -1, square))
     // concave polygon (L-shape): the notch is outside
-    val lShape = Seq((0.0, 0.0), (10.0, 0.0), (10.0, 4.0), (4.0, 4.0), (4.0, 10.0), (0.0, 10.0))
     assert(GeoFunctions.pointInPolygon(2, 8, lShape)) // in the vertical arm
     assert(GeoFunctions.pointInPolygon(8, 2, lShape)) // in the horizontal arm
     assert(!GeoFunctions.pointInPolygon(8, 8, lShape)) // in the notch
   }
 
+  private val lShape =
+    Seq((0.0, 0.0), (10.0, 0.0), (10.0, 4.0), (4.0, 4.0), (4.0, 10.0), (0.0, 10.0))
+
   test("column PIP equals scala PIP on a concave ring") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val lShape = Seq((0.0, 0.0), (10.0, 0.0), (10.0, 4.0), (4.0, 4.0), (4.0, 10.0), (0.0, 10.0))
-    val pts = (for (x <- -2 to 12; y <- -2 to 12) yield (x + 0.5, y + 0.5)).toDF("x", "y")
+    val grid = for (x <- -2 to 12; y <- -2 to 12) yield (x + 0.5, y + 0.5)
+    // on the latitudes of the three horizontal edges, and far outside the
+    // bounding box
+    val onEdges = for (x <- -2 to 12; y <- Seq(0.0, 4.0, 10.0)) yield (x + 0.5, y)
+    val far = Seq((-100.0, 5.0), (100.0, 5.0), (5.0, -100.0), (5.0, 100.0),
+      (-1e6, -1e6), (1e6, 1e6), (2.0, 1e6), (1e6, 2.0))
+    val pts = (grid ++ onEdges ++ far).toDF("x", "y")
     val got = pts.withColumn("in", GeoFunctions.pointInPolygonColumn(col("x"), col("y"), lShape))
       .as[(Double, Double, Boolean)].collect()
+    assert(got.length === grid.size + onEdges.size + far.size)
     got.foreach { case (x, y, in) =>
       assert(in === GeoFunctions.pointInPolygon(x, y, lShape), s"($x, $y)")
     }
+  }
+
+  test("column PIP has one term per non-horizontal edge and no division by zero") {
+    import org.apache.spark.sql.catalyst.expressions.{Divide, Literal}
+    import org.apache.spark.sql.functions._
+    // the L-shape's six edges alternate vertical and horizontal
+    val tree = spark.range(1).select(col("id").cast("double").as("x"), lit(1.0).as("y"))
+      .select(GeoFunctions.pointInPolygonColumn(col("x"), col("y"), lShape))
+    val divides = tree.queryExecution.analyzed.expressions
+      .flatMap(_.collect { case d: Divide => d })
+    assert(divides.size === 3, divides)
+    assert(!divides.exists(_.right match {
+      case Literal(v: Double, _) => v == 0.0
+      case _ => false
+    }), divides)
+    val flat = Seq((0.0, 1.0), (5.0, 1.0), (9.0, 1.0))
+    intercept[IllegalArgumentException](
+      GeoFunctions.pointInPolygonColumn(col("x"), col("y"), flat))
   }
 
   test("first-match-wins region assignment") {

@@ -15,7 +15,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
     "graft_shingles" -> "(text, n)",
     "graft_grams" -> "(text, n)",
     "graft_nfc" -> "(text)",
-    "graft_point_in_polygon" -> "(lon, lat, xs, ys)",
     "graft_hyperplane_sig" -> "(vec, dims, bits)",
     "graft_dot" -> "(a, b, dims[, offset])",
     "graft_maxsim" -> "(q, d, tokens, tokDims)",
@@ -39,7 +38,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
   private val dials = Map(
     "graft_shingles" -> "n",
     "graft_grams" -> "n",
-    "graft_point_in_polygon" -> "ring",
     "graft_hyperplane_sig" -> "dims/bits",
     "graft_dot" -> "dims/offset",
     "graft_maxsim" -> "tokens/tokDims",

@@ -11,11 +11,11 @@ import graft.SparkSpec
 import graft.tools.PlanAudit
 
 /** The [[KernelCall]] contract, checked for every registry entry that
-  * builds one, and for the two hand-written scalars
-  * (`graft_point_in_polygon`, `graft_barrier`): over ScalaCheck-generated
-  * inputs (NUL, lone surrogates, astral code points, empty, about 64 KiB,
-  * null), interpreted evaluation equals generated code, and two calls in
-  * one projection compile and sit inside one whole-stage codegen span.
+  * builds one, and for the hand-written scalar `graft_barrier`: over
+  * ScalaCheck-generated inputs (NUL, lone surrogates, astral code points,
+  * empty, about 64 KiB, null), interpreted evaluation equals generated
+  * code, and two calls in one projection compile and sit inside one
+  * whole-stage codegen span.
   */
 class KernelCallSpec extends SparkSpec {
 
@@ -95,8 +95,6 @@ class KernelCallSpec extends SparkSpec {
 
   private def s(i: Int) = col(s"s$i")
   private def w(i: Int) = col(s"w$i")
-  // a coordinate in [-1, 1] from a generated fingerprint
-  private def coord(i: Int) = col(s"fp$i") / 100.0 - 1.0
 
   private val calls: Map[String, Int => Seq[Column]] = Map(
     "graft_h64" -> (i => Seq(s(i))),
@@ -122,9 +120,7 @@ class KernelCallSpec extends SparkSpec {
       Seq(col(if (i == 1) "f1" else "d2"), lit(8), lit(8 * i))),
     "graft_bloom_probe" -> (i => Seq(bloom, col(s"fp$i"), lit(3))),
     "graft_cms_query" -> (i => Seq(cms, col(s"fp$i"), lit(2))),
-    // the two scalars that are not KernelCalls
-    "graft_point_in_polygon" -> (i => Seq(coord(i), coord(3 - i),
-      lit(Array(-0.5, 0.9, 0.1 * i)), lit(Array(-0.8, 0.0, 0.7)))),
+    // the one scalar that is not a KernelCall
     "graft_barrier" -> (i => Seq(if (i == 1) s(1) else col("fp2"))))
 
   private def withConf[T](kv: (String, String)*)(body: => T): T = {
@@ -173,7 +169,7 @@ class KernelCallSpec extends SparkSpec {
   }
 
   test("every scalar entry has a call shape here") {
-    assert(scalars.size == 20)
+    assert(scalars.size == 19)
     assert(calls.keySet == nodeClass.keySet)
   }
 

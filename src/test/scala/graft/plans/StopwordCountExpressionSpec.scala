@@ -43,7 +43,7 @@ class StopwordCountExpressionSpec extends SparkSpec {
   test("structurally identical instances are equal — canonicalization/CSE must see them") {
     // the stopword set rides as a HashSet dial, not an Array: Array
     // equality is by reference, which made five structurally identical
-    // langIdColumn counts compare unequal and defeated common-
+    // per-language counts compare unequal and defeated common-
     // subexpression elimination (round-8 ADVICE)
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
     import org.apache.spark.sql.types.{ArrayType, StringType}
